@@ -7,6 +7,9 @@ bench.py's BASELINE.md generator includes on every regeneration
 (the soak is too slow to run per-bench).
 
     python scripts/soak.py [n_forks]   # default 25600 -> ~102k docs
+
+Cores come from ``SPARK_GRAFT_CPUS`` (default: nproc); the driver heap
+from ``YPO_DRIVER_MEM`` (default 6g, sized for a 15 GB box).
 """
 
 from __future__ import annotations
@@ -24,10 +27,14 @@ sys.path.insert(0, REPO)
 
 def main():
     n_forks = int(sys.argv[1]) if len(sys.argv) > 1 else 25_600
-    # the 10x reasoning fixpoint (SWRL semi-naive rounds with
-    # localCheckpoint lineage cuts over ~8.7M triples) OOMs the default
-    # 8g single-JVM heap; the soak box has 128 GiB
-    os.environ.setdefault("YPO_DRIVER_MEM", "32g")
+    # cores: SPARK_GRAFT_CPUS, else every CPU this process may run on
+    # (what nproc prints)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    # a 6g driver heap leaves a 15 GB box room for the OS and one
+    # Python worker per core; reasoning runs per document inside the
+    # workers, so the heap holds no fixpoint state. YPO_DRIVER_MEM
+    # overrides it.
+    os.environ.setdefault("YPO_DRIVER_MEM", "6g")
     from pyspark.sql import functions as F
 
     from yamlpyowl_spark.operators.linking import canonical_nodes
@@ -44,7 +51,7 @@ def main():
         )
         print(f"soak corpus: {n} rows", file=sys.stderr)
 
-    spark = get_spark(cpus=32, app_name="ypo-soak")
+    spark = get_spark(cpus=cpus, app_name="ypo-soak")
     pipe = KGPipeline(spark, import_map=build_default_import_map())
     src = spark.read.parquet(corpus)
     n_docs = src.filter(

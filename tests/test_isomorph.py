@@ -129,3 +129,70 @@ def test_isomorph_distinct_contents_stay_separate(spark):
     wrapped = {tuple(r) for r in reason_per_isomorph(t, owlrl_materialize).collect()}
     assert wrapped == direct
     assert any(o.endswith("s2#a") for _s, _p, o, *_ in wrapped)
+
+
+def _string_builtin_fork(base):
+    """A rule whose builtins read inside an IRI-bound variable: the
+    derived values differ between forks, not just by the base IRI."""
+    rows = [
+        (base + "r", V.YPO_RULE_SRC,
+         "named(?x, ?y), stringLength(?n, ?y), upperCase(?u, ?y) "
+         "-> nameLen(?x, ?n), nameUpper(?x, ?u)", True),
+        (base + "a", base + "named", base + "b", False),
+    ]
+    return [(s, p, o, il, None, base) for s, p, o, il in rows]
+
+
+def test_string_builtin_docs_reason_alone(spark):
+    """Two forks that differ only in base IRI, with stringLength/
+    upperCase over an IRI-bound variable: reasoned() must equal the
+    three engines run per document without dedup."""
+    from pyspark.sql import functions as F
+
+    from yamlpyowl_spark.operators.swrl import forward_chain
+    from yamlpyowl_spark.plans.pipeline import KGPipeline
+
+    t = spark.createDataFrame(
+        _string_builtin_fork("http://a.org/x#") + _string_builtin_fork("http://bb.org/x#"),
+        SCHEMA,
+    )
+    direct = {
+        tuple(r)
+        for r in forward_chain(t, on_unsupported="skip")
+        .unionByName(dl_model_search(t))
+        .unionByName(owlrl_materialize(t))
+        .collect()
+    }
+    got = {tuple(r) for r in KGPipeline(spark).reasoned(t).collect()}
+    assert got == direct
+    lens = {
+        r["obj"]
+        for r in KGPipeline(spark).reasoned(t).filter(F.col("pred").endswith("nameLen")).collect()
+    }
+    assert lens == {str(len("http://a.org/x#b")), str(len("http://bb.org/x#b"))}
+
+
+def test_reasoned_plan_one_fingerprint_one_grouped_map(spark, forked):
+    """reasoned() is ONE Spark pass: one grouped-map Python stage for
+    all three engines, one fingerprint aggregate (its exchange reused
+    by every consumer), and the grouped map's input hash-partitioned on
+    doc_iri to the session's parallelism rather than left to AQE's
+    coalescing."""
+    import re
+
+    from yamlpyowl_spark.plans.pipeline import KGPipeline
+
+    assert spark.sparkContext.defaultParallelism > 1
+    df = KGPipeline(spark).reasoned(forked)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    assert final.count("FlatMapGroupsInPandas") == 1
+    # one map-side and one final fingerprint aggregate
+    n_partial = final.count("partial_collect_list(")
+    assert n_partial == 1 and final.count("collect_list(") - n_partial == 1, final
+    lines = final.splitlines()
+    i = next(k for k, l in enumerate(lines) if "FlatMapGroupsInPandas" in l)
+    ex = next(l for l in lines[i:] if "Exchange " in l)
+    m = re.search(r"Exchange hashpartitioning\(doc_iri#\d+, (\d+)\)", ex)
+    assert m and int(m.group(1)) == spark.sparkContext.defaultParallelism, ex

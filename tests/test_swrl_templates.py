@@ -1,5 +1,6 @@
-"""Template-grouped SWRL evaluation: driver work is O(#rule shapes),
-not O(#documents) — the round-1 verdict's scale fix. Plus up-front
+"""SWRL rule compilation into structural templates (one compiled shape
+per rule structure, shared across documents), the per-document
+semi-naive engine's parity with the sequential oracle, and up-front
 validation of unsupported fragments (ADVICE r01)."""
 
 import pytest
@@ -63,7 +64,7 @@ def test_hundred_docs_one_template(spark):
 
     rt = rule_table(triples)
     keys = [r[0] for r in rt.select("template_key").distinct().collect()]
-    # 120 documents, 120 rule instances -> ONE template (one plan/round)
+    # 120 documents, 120 rule instances -> ONE template
     assert keys == ["P(v0,v1)=>P(v1,v0)"] or len(keys) == 1
     assert rt.count() == 120
 
@@ -172,8 +173,8 @@ def test_bad_rule_collect_is_bounded(spark):
 
 
 def test_rule_parse_is_distributed(spark):
-    # the rules table is built by an Arrow-batched stage, and the only
-    # thing collected is the distinct template-key list
+    # the rules table (the bad-rule diagnostic's input) is built by an
+    # Arrow-batched stage, never row-at-a-time Python
     rows = _doc("http://ex.org/solo#")
     triples = spark.createDataFrame(rows, TRIPLE_COLS)
     plan = rule_table(triples)._jdf.queryExecution().executedPlan().toString()
@@ -641,3 +642,21 @@ def test_boolean_not_builtin(spark):
     seq = {(s, p.split("#")[-1], o)
            for s, p, o, il, dt, d in sequential_forward_chain(rows)}
     assert seq == got
+
+
+def test_class_atoms_never_inherit_types_across_documents(spark):
+    """Doc A's axiom A#X ⊑ B#Y must not let doc B's individual typed
+    A#X fire doc B's rule over Y: the subclass closure is the
+    document's own. Engine == sequential oracle (which derives
+    nothing here)."""
+    from yamlpyowl_spark.sources.artifacts import sequential_forward_chain
+
+    A, B = "http://ex.org/a#", "http://ex.org/b#"
+    rows = [
+        (A + "X", V.RDFS_SUBCLASSOF, B + "Y", False, None, A),
+        (B + "i", V.RDF_TYPE, A + "X", False, None, B),
+        (B + "r", V.YPO_RULE_SRC, "Y(?x) -> tagged(?x, ?x)", True, None, B),
+    ]
+    got = {tuple(r) for r in forward_chain(spark.createDataFrame(rows, TRIPLE_COLS)).collect()}
+    assert got == set(sequential_forward_chain(rows))
+    assert (B + "i", B + "tagged", B + "i", False, None, B) not in got

@@ -27,7 +27,6 @@ from typing import Optional, Set
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .operators.sparql import make_query as _make_query
-from .operators.swrl import forward_chain
 from .parser.document import DocumentParser
 from .schema import SOURCE_SCHEMA
 from .sources.fixtures import build_default_import_map
@@ -628,22 +627,19 @@ class OntologyManager:
     def sync_reasoner(self, **_kwargs) -> int:
         """Forward-chain SWRL rules + transitive/inverse axioms, plus
         DL model search for the OneOf/Functional/AllDifferent fragment
-        (the zebra puzzle), and merge the inferred facts into
+        (the zebra puzzle) and OWL-RL rules — the same one-pass
+        composition as ``KGPipeline.reasoned``, but raising on an
+        unsupported SWRL rule — and merge the inferred facts into
         ``self.triples`` (the reference shells out to Pellet here,
         core.py:1342-1343). Returns #inferred."""
         if self._reasoned:
             return 0
         import warnings
 
-        from .operators.dlreason import YPO_DL_UNSUPPORTED, dl_model_search
-        from .operators.owlrl import owlrl_materialize
+        from .operators.dlreason import YPO_DL_UNSUPPORTED
+        from .operators.isomorph import reason_all
 
-        inferred = (
-            forward_chain(self.triples)
-            .unionByName(dl_model_search(self.triples))
-            .unionByName(owlrl_materialize(self.triples))
-            .distinct()
-        )
+        inferred = reason_all(self.triples, swrl_on_unsupported="raise")
         # diagnostic rows must not masquerade as ontology facts in
         # self.triples / save(): surface them as warnings instead
         from .vocab import YPO

@@ -45,8 +45,8 @@ _BROADCAST_PAIR_ROWS = 100_000
 # almost entirely in Spark job latency (~2 jobs × ~120 ms per doubling
 # round), not compute. Under these bounds the closure is computed on
 # the driver from ONE bounded collect and shipped back as a local
-# relation — the exact bounded-collect discipline rule_table's
-# bad-rule probe established. Both bounds are hard caps, not hints:
+# relation — the bounded-collect discipline of the SWRL bad-rule
+# diagnostic (swrl.check_rules). Both bounds are hard caps, not hints:
 # past either, the distributed loops below run unchanged.
 _DRIVER_CLOSURE_EDGES = 5_000      # collect ≤ ~1 MB of string pairs
 _DRIVER_CLOSURE_PAIRS = 500_000    # abort cap on the result size

@@ -85,9 +85,10 @@ from __future__ import annotations
 
 from typing import Dict, List, Optional, Set, Tuple
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from .. import vocab as V
+from ..schema import doc_grouped_map
 from . import facets as _FX
 
 RDF_FIRST = V.RDF + "first"
@@ -1085,7 +1086,53 @@ def _solve_doc(
     return inferred
 
 
-DL_OUT_COLS = ["subj", "pred", "obj", "obj_is_literal", "obj_datatype", "doc_iri"]
+def dl_doc(
+    doc_iri: str,
+    rows,
+    max_models: int = 8,
+    max_steps: int = 500_000,
+    on_unsupported: str = "warn",
+) -> set:
+    """One document's DL delta as (subj, pred, obj, obj_is_literal,
+    obj_datatype) tuples: the CSP solve over its entity triples, plus
+    one ``ypo:dlUnsupportedConstruct`` diagnostic per construct the
+    fragment ignores (``on_unsupported="warn"``). Literal rows take
+    part only in documents that use the facet vocabulary (r6c:
+    facet-constrained data ranges need the asserted data values and
+    facet bound literals; the CSP core stays entity-only)."""
+    rows = set(rows)
+    facet_doc = any(p in _FACET_VOCAB for _, p, _, _, _ in rows)
+    ent = sorted({(s, p, o) for s, p, o, il, _ in rows if not il})
+    lit_rows = sorted({(s, p, o) for s, p, o, il, _ in rows if il}) if facet_doc else []
+    unsupported = set(p for _, p, _ in ent if p in UNSUPPORTED_DL_PREDS)
+    # facet vocabulary is CONDITIONALLY supported: a range node the
+    # shared evaluator decodes is reasoned over; anything it cannot
+    # parse (unknown facet, user datatype, malformed bound) keeps
+    # the loud diagnostic naming the construct
+    facet_nodes = {(s, p, o) for s, p, o in ent if p in _FACET_VOCAB}
+    if facet_nodes:
+        fm = _DocModel(ent + lit_rows)
+        for s, p, o in facet_nodes:
+            if p == _FX.ON_DATA_RANGE:
+                ok = (
+                    _FX.parse_data_range(fm, o) is not None
+                    if o.startswith("_:")
+                    else o in _FX.SUPPORTED_BASES
+                )
+            else:
+                ok = _FX.parse_data_range(fm, s) is not None
+            if not ok:
+                unsupported.add(p)
+    if unsupported and on_unsupported == "raise":
+        raise UnsupportedDLError(
+            f"{doc_iri} uses DL constructs outside the supported "
+            f"fragment: {', '.join(sorted(unsupported))}"
+        )
+    inferred = _solve_doc(ent, max_models=max_models, max_steps=max_steps, lit_rows=lit_rows)
+    out = {(s, p, o, False, None) for s, p, o in inferred.difference(ent)}
+    if on_unsupported == "warn":
+        out |= {(doc_iri, YPO_DL_UNSUPPORTED, c, False, None) for c in unsupported}
+    return out
 
 
 def dl_model_search(
@@ -1094,8 +1141,8 @@ def dl_model_search(
     max_steps: int = 500_000,
     on_unsupported: str = "warn",
 ) -> DataFrame:
-    """Distributed DL model search: one CSP solve per document via
-    ``applyInPandas`` (grouped on ``doc_iri``). Returns the inferred
+    """Distributed DL model search: :func:`dl_doc` — one CSP solve per
+    document — in a grouped map on ``doc_iri``. Returns the inferred
     delta with the standard fact schema. Entity facts only — literal
     triples never participate in this fragment.
 
@@ -1109,83 +1156,7 @@ def dl_model_search(
     the document; ``"ignore"`` restores the silent fall-through."""
     if on_unsupported not in ("warn", "raise", "ignore"):
         raise ValueError(f"on_unsupported must be warn|raise|ignore: {on_unsupported!r}")
-    # r6c: literal rows travel too — facet-constrained data ranges need
-    # the asserted data values and facet bound literals; the CSP core
-    # stays entity-only (split per doc below). Only docs that actually
-    # USE the facet vocabulary ship their literals (broadcast semi-join
-    # on a pushdown-filtered scan) — for the common corpus the literal
-    # volume added to the DL shuffle is exactly zero.
-    facet_docs = (
-        triples.filter(F.col("pred").isin(*sorted(_FACET_VOCAB)))
-        .select("doc_iri")
-        .distinct()
-        .withColumn("__facet_doc", F.lit(True))
+    return doc_grouped_map(
+        triples,
+        lambda d, rows: dl_doc(d, rows, max_models, max_steps, on_unsupported),
     )
-    ent = (
-        triples.join(F.broadcast(facet_docs), "doc_iri", "left")
-        .filter(~F.col("obj_is_literal") | F.col("__facet_doc").isNotNull())
-        .select("doc_iri", "subj", "pred", "obj", "obj_is_literal")
-        .distinct()
-    )
-
-    def per_doc(pdf):
-        import pandas as pd
-
-        if pdf.empty:
-            return pd.DataFrame(columns=DL_OUT_COLS)
-        doc_iri = pdf["doc_iri"].iloc[0]
-        all_rows = list(
-            zip(pdf["subj"], pdf["pred"], pdf["obj"], pdf["obj_is_literal"])
-        )
-        rows = [(s, p, o) for s, p, o, il in all_rows if not il]
-        lit_rows = [(s, p, o) for s, p, o, il in all_rows if il]
-        unsupported = set(p for _, p, _ in rows if p in UNSUPPORTED_DL_PREDS)
-        # facet vocabulary is CONDITIONALLY supported: a range node the
-        # shared evaluator decodes is reasoned over; anything it cannot
-        # parse (unknown facet, user datatype, malformed bound) keeps
-        # the loud diagnostic naming the construct
-        facet_nodes = {
-            (s, p, o) for s, p, o in rows if p in _FACET_VOCAB
-        }
-        if facet_nodes:
-            fm = _DocModel(rows + lit_rows)
-            for s, p, o in facet_nodes:
-                if p == _FX.ON_DATA_RANGE:
-                    ok = (
-                        _FX.parse_data_range(fm, o) is not None
-                        if o.startswith("_:")
-                        else o in _FX.SUPPORTED_BASES
-                    )
-                else:
-                    ok = _FX.parse_data_range(fm, s) is not None
-                if not ok:
-                    unsupported.add(p)
-        unsupported = sorted(unsupported)
-        if unsupported and on_unsupported == "raise":
-            raise UnsupportedDLError(
-                f"{doc_iri} uses DL constructs outside the supported "
-                f"fragment: {', '.join(unsupported)}"
-            )
-        asserted = set(rows)
-        inferred = _solve_doc(
-            rows, max_models=max_models, max_steps=max_steps, lit_rows=lit_rows
-        )
-        out = sorted(t for t in inferred if t not in asserted)
-        if unsupported and on_unsupported == "warn":
-            out.extend((doc_iri, YPO_DL_UNSUPPORTED, c) for c in unsupported)
-        return pd.DataFrame(
-            {
-                "subj": [t[0] for t in out],
-                "pred": [t[1] for t in out],
-                "obj": [t[2] for t in out],
-                "obj_is_literal": [False] * len(out),
-                "obj_datatype": [None] * len(out),
-                "doc_iri": [doc_iri] * len(out),
-            }
-        )
-
-    schema = (
-        "subj string, pred string, obj string, obj_is_literal boolean, "
-        "obj_datatype string, doc_iri string"
-    )
-    return ent.groupBy("doc_iri").applyInPandas(per_doc, schema)

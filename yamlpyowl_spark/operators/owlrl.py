@@ -99,9 +99,10 @@ from __future__ import annotations
 
 from typing import Dict, List, Optional, Set, Tuple
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from .. import vocab as V
+from ..schema import doc_grouped_map
 from . import facets as _FX
 
 OWL = "http://www.w3.org/2002/07/owl#"
@@ -1020,50 +1021,25 @@ def infer_doc_fixpoint(rows) -> Set[Tuple[str, str, str, bool]]:
     return acc
 
 
-OUT_COLS = ["subj", "pred", "obj", "obj_is_literal", "obj_datatype", "doc_iri"]
+def owlrl_doc(rows) -> set:
+    """One document's OWL-RL delta as (subj, pred, obj, obj_is_literal,
+    obj_datatype) tuples: :func:`infer_doc_fixpoint` over its triples,
+    plus dt-not-type (r6d): an asserted literal whose lexical form is
+    outside its DECLARED datatype's lexical/value space is an
+    inconsistency Pellet raises on — same canon() evaluator as the
+    facet checks (xsd:byte "999" is ill-typed, unknown datatypes are
+    left alone, never silently validated)."""
+    rows = list(rows)
+    out = set(infer_doc_fixpoint([(s, p, o, il) for s, p, o, il, _ in rows]))
+    for s, p, o, il, dt in rows:
+        if il and dt and _FX.lexically_valid(o, dt) is False:
+            out.add((s, V.YPO + "datatypeViolation", p, False))
+    return {(s, p, o, il, None) for s, p, o, il in out}
 
 
 def owlrl_materialize(triples: DataFrame) -> DataFrame:
-    """Distributed materialization: one rule pass per document via
-    ``applyInPandas`` (grouped on ``doc_iri``). Returns the inferred
-    delta with the standard fact schema (entity triples only)."""
-    src = triples.select(
-        "doc_iri", "subj", "pred", "obj", "obj_is_literal", "obj_datatype"
-    ).distinct()
-
-    def per_doc(pdf):
-        import pandas as pd
-
-        if pdf.empty:
-            return pd.DataFrame(columns=OUT_COLS)
-        doc_iri = pdf["doc_iri"].iloc[0]
-        rows = list(zip(pdf["subj"], pdf["pred"], pdf["obj"], pdf["obj_is_literal"]))
-        out = set(infer_doc_fixpoint(rows))
-        # dt-not-type (r6d): an asserted literal whose lexical form is
-        # outside its DECLARED datatype's lexical/value space is an
-        # inconsistency Pellet raises on — same canon() evaluator as
-        # the facet checks (xsd:byte "999" is ill-typed, unknown
-        # datatypes are left alone, never silently validated)
-        for s, p, o, il, dt in zip(
-            pdf["subj"], pdf["pred"], pdf["obj"], pdf["obj_is_literal"],
-            pdf["obj_datatype"],
-        ):
-            if il and dt and _FX.lexically_valid(o, dt) is False:
-                out.add((s, V.YPO + "datatypeViolation", p, False))
-        out = sorted(out)
-        return pd.DataFrame(
-            {
-                "subj": [t[0] for t in out],
-                "pred": [t[1] for t in out],
-                "obj": [t[2] for t in out],
-                "obj_is_literal": [t[3] for t in out],
-                "obj_datatype": [None] * len(out),
-                "doc_iri": [doc_iri] * len(out),
-            }
-        )
-
-    schema = (
-        "subj string, pred string, obj string, obj_is_literal boolean, "
-        "obj_datatype string, doc_iri string"
-    )
-    return src.groupBy("doc_iri").applyInPandas(per_doc, schema)
+    """Distributed materialization: :func:`owlrl_doc` — one rule pass
+    per document — in a grouped map on ``doc_iri``. Returns the
+    inferred delta with the standard fact schema (entity triples
+    only)."""
+    return doc_grouped_map(triples, lambda _d, rows: owlrl_doc(rows))

@@ -1,20 +1,20 @@
-"""SWRL-rule forward chaining as an iterative DataFrame fixpoint.
+"""SWRL-rule forward chaining, one document at a time.
 
 The reference applies SWRL rules by shelling out to a Java/Pellet
-reasoner (core.py:1342-1343, sync_reasoner_pellet). Here rule bodies
-become chains of equi-joins over the triples table and the fixpoint is
-a driver loop with ``localCheckpoint`` per round — the classic
-(semi-)naive Datalog evaluation mapped onto Spark.
+reasoner (core.py:1342-1343, sync_reasoner_pellet). Here each rule is
+compiled once into a structural **template** (the rule's signature —
+atom kinds, variable pattern, constant positions — with concrete
+predicate/class names abstracted into slots; :func:`encode_rule` /
+:func:`_parse_template`) and evaluated by :func:`forward_chain_doc`, a
+semi-naive, predicate-indexed Python fixpoint over ONE document's rows.
 
-Scale shape: rules are grouped by **template** (the rule's structural
-signature — atom kinds, variable pattern, constant positions — with
-concrete predicate/class names abstracted into slot columns). The
-driver builds ONE join pipeline per distinct template per round; the
-rules themselves stay in a distributed DataFrame and reach the plan as
-join columns keyed on ``(doc_iri, pred)``. Work on the driver is
-O(#distinct rule shapes), not O(#documents × #rules): 10^9 documents
-that all carry the same five rule structures cost five plans per
-round, same as one document.
+Scale shape: inference never crosses ``doc_iri``, so the fixpoint runs
+inside a grouped map on ``doc_iri`` — one Python crossing per document,
+no driver loop, no per-round Spark jobs; the work is O(document size ×
+rounds) and spreads over all tasks. ``KGPipeline.reasoned`` runs it in
+the same grouped map as the DL and OWL-RL engines, once per
+isomorphism class (:mod:`isomorph`). The bad-rule diagnostic stays
+eager and bounded on the driver (:func:`check_rules`).
 
 Supported (everything the reference fixtures use, plus class-atom
 heads which the reference's Pellet path also accepts):
@@ -27,7 +27,8 @@ heads which the reference's Pellet path also accepts):
                                         constants allowed in any slot;
 * arithmetic atoms   ``add/subtract/multiply/mod(?z, ?x, ?y)`` —
   swrlb result-first convention; binds ``?z`` (or checks it when
-  already bound); INTEGER fragment via try_cast/try_add & co (r6b)
+  already bound); INTEGER fragment with Spark's try_cast/try_add
+  BIGINT semantics (r6b)
 * string atoms       ``stringConcat(?z, ?a, ?b, ...)`` (n-ary),
   ``stringLength/upperCase/lowerCase(?z, ?x)`` — result-first, bind
   or check like the arithmetic batch; ``contains/startsWith/
@@ -41,7 +42,7 @@ heads which the reference's Pellet path also accepts):
   ``p < start + length`` (1-based; a negative/zero ``start`` shifts
   the window, never wraps), start/length are integer constants or
   previously-bound variables — non-integral bindings drop the row
-  via try_cast exactly like the arithmetic batch. XPath's
+  exactly like the arithmetic batch. XPath's
   FLOAT-argument rounding stays outside the fragment (a
   Java-vs-Python formatting parity trap) and raises up front;
 * builtin atoms      ``greaterThan/lessThan/greaterThanOrEqual/
@@ -64,14 +65,16 @@ triple-parity contract is on asserted triples (SURVEY.md §2.5).
 
 Rule names are resolved against the document IRI (rules are emitted by
 the parser as ``(rule_iri, ypo:ruleSrc, src)`` literals), and chaining
-is doc-scoped: all joins carry ``doc_iri``.
+is doc-scoped: a rule reads only its own document's facts, class
+memberships and rdfs:subClassOf axioms.
 """
 
 from __future__ import annotations
 
+import operator
 import re
 import warnings
-from functools import lru_cache, reduce
+from functools import lru_cache
 from typing import List, Tuple
 
 from pyspark.sql import DataFrame, functions as F, types as T
@@ -79,8 +82,7 @@ from pyspark.sql import DataFrame, functions as F, types as T
 from .. import vocab as V
 from ..parser.document import _parse_swrl
 from ..parser.model import ParseError
-from .closure import transitive_closure
-from ..schema import arrow_local_df
+from ..schema import doc_grouped_map
 
 _BUILTINS = {
     "greaterThan": "gt",
@@ -90,17 +92,23 @@ _BUILTINS = {
     "equal": "eq",
     "notEqual": "ne",
 }
-_BI_SQL = {"gt": ">", "lt": "<", "ge": ">=", "le": "<=", "eq": "=", "ne": "!="}
+_BI_OPS = {
+    "gt": operator.gt,
+    "lt": operator.lt,
+    "ge": operator.ge,
+    "le": operator.le,
+    "eq": operator.eq,
+    "ne": operator.ne,
+}
 # swrlb arithmetic (r6b): add/subtract/multiply/mod with the FIRST
 # argument as the result (swrlb argument convention). INTEGER fragment:
-# operands try_cast to BIGINT (a non-integral binding drops the row,
-# the comparison-builtin skip semantics) and the try_* forms return
-# NULL instead of raising under ANSI mode on overflow / mod-by-zero —
-# NULL results are filtered, never emitted. Division stays outside the
+# operands read as BIGINT (a non-integral binding drops the row, the
+# comparison-builtin skip semantics); overflow and mod-by-zero drop the
+# row too, never raise. Division stays outside the
 # fragment (its value is non-integral almost surely; a float dialect
 # would hitch engine parity to Java-vs-Python double formatting).
 _ARITH = {"add": "ad", "subtract": "sb", "multiply": "ml", "mod": "md"}
-_AR_SQL = {"ad": "try_add", "sb": "try_subtract", "ml": "try_multiply", "md": "try_mod"}
+_AR_CODES = frozenset(_ARITH.values())
 # swrlb string builtins (r6c): result-first like the arithmetic batch.
 # stringConcat is n-ary (result + >=2 operands); stringLength binds the
 # decimal lexical of the CHARACTER count; upperCase/lowerCase follow
@@ -108,9 +116,8 @@ _AR_SQL = {"ad": "try_add", "sb": "try_subtract", "ml": "try_multiply", "md": "t
 # dialect; engine parity asserted in tests). contains/startsWith/
 # endsWith are check builtins over bound strings/constants. substring
 # (r6d) is the XPath INTEGER fragment: start/length must be integer
-# constants or bound variables (try_cast semantics — non-integral
-# drops the row); float arguments would need XPath round() parity and
-# stay loud-out.
+# constants or bound variables (a non-integral binding drops the row);
+# float arguments would need XPath round() parity and stay loud-out.
 _STR_FN = {
     "stringConcat": "sc",
     "stringLength": "sl",
@@ -122,24 +129,14 @@ _STR_FN = {
     # binds the canonical lexical of the flipped value
     "booleanNot": "bn",
 }
-_SF_SQL = frozenset(("sc", "sl", "uc", "lc", "ss", "bn"))
+_SF_CODES = frozenset(_STR_FN.values())
 _STR_CHECK = {"contains": "ct", "startsWith": "sw", "endsWith": "ew"}
-_SCK_SQL = {"ct": "contains", "sw": "startswith", "ew": "endswith"}
+_SCK_FN = {
+    "ct": lambda a, b: b in a,
+    "sw": str.startswith,
+    "ew": str.endswith,
+}
 _INVALID = "!unsupported"
-
-# fact-side broadcast bound for the fixpoint's per-atom joins (rows of
-# the ~150-byte fact tuple ≈ 15 MB broadcast at the bound) — see the
-# dispatch note in forward_chain
-_BROADCAST_FACT_ROWS = 100_000
-
-# driver-rules regime bound (r7): when the corpus's rule-bearing
-# triples fit one bounded probe (limit N+1 — never an unbounded
-# collect), the rule table is parsed on the driver with the same
-# _parse_swrl/encode_rule functions and shipped back as a local
-# relation — saving the Arrow parse stage plus the bad-rule and
-# distinct-rule collect jobs. Past the bound forward_chain uses the
-# distributed rule_table path unchanged.
-_DRIVER_RULE_ROWS = 10_000
 
 
 def _unquote(a: str) -> str:
@@ -383,22 +380,22 @@ _ATOM_RE = re.compile(r"(P|T|gt|lt|ge|le|eq|ne|ad|sb|ml|md|sc|sl|uc|lc|ss|bn|ct|
 
 @lru_cache(maxsize=4096)
 def _parse_template(key: str):
-    """Driver-side inverse of :func:`encode_rule`'s key: atom
-    descriptors with slot indices assigned by the identical walk.
-    Cached: the fixpoint re-parses each template once per round per
-    delta position otherwise (callers never mutate the result)."""
+    """Inverse of :func:`encode_rule`'s key: atom descriptors with slot
+    indices assigned by the identical walk. Cached: every document
+    carrying a rule of this shape re-parses it otherwise (callers never
+    mutate the result)."""
     body_s, head_s = key.split("=>")
     slot = 0
     body = []
     for m in _ATOM_RE.finditer(body_s):
         kind, args = m.group(1), m.group(2).split(",")
-        if kind in _BI_SQL:
+        if kind in _BI_OPS:
             if args[1] == "C":
                 body.append(("bi", kind, int(args[0][1:]), ("c", slot)))
                 slot += 1
             else:
                 body.append(("bi", kind, int(args[0][1:]), ("v", int(args[1][1:]))))
-        elif kind in _AR_SQL:
+        elif kind in _AR_CODES:
             outv = int(args[0][1:])
             ops = []
             for a in args[1:]:
@@ -408,7 +405,7 @@ def _parse_template(key: str):
                 else:
                     ops.append(("v", int(a[1:])))
             body.append(("ar", kind, outv, ops[0], ops[1]))
-        elif kind in _SF_SQL:
+        elif kind in _SF_CODES:
             outv = int(args[0][1:])
             ops = []
             for a in args[1:]:
@@ -418,7 +415,7 @@ def _parse_template(key: str):
                 else:
                     ops.append(("v", int(a[1:])))
             body.append(("sf", kind, outv, ops))
-        elif kind in _SCK_SQL:
+        elif kind in _SCK_FN:
             ops = []
             for a in args:
                 if a == "C":
@@ -485,7 +482,7 @@ def _parse_template(key: str):
 
 
 # --------------------------------------------------------------------------
-# distributed rule table
+# rule table (feeds the bad-rule diagnostic)
 # --------------------------------------------------------------------------
 
 _RULES_SCHEMA = T.StructType(
@@ -521,33 +518,6 @@ def _encode_one(doc_iri: str, src: str):
         return _INVALID, [f"{type(e).__name__}: {e}", src]
 
 
-def _rule_rows_local(triples: DataFrame):
-    """Driver-rules regime: ONE bounded probe of the rule-bearing
-    triples; if they fit, the full (doc_iri, template_key, slots) rule
-    list is built driver-side with the SAME parse/encode functions the
-    distributed path maps. Returns None past the bound."""
-    probe = _rule_rel(triples).limit(_DRIVER_RULE_ROWS + 1).collect()
-    if len(probe) > _DRIVER_RULE_ROWS:
-        return None
-    out = []
-    seen_srcs = set()
-    for r in probe:
-        d, p, s, o = r["doc_iri"], r["pred"], r["subj"], r["obj"]
-        if p == V.YPO_RULE_SRC:
-            if (d, o) in seen_srcs:
-                continue
-            seen_srcs.add((d, o))
-            key, slots = _encode_one(d, o)
-            out.append((d, key, list(slots)))
-        elif p == V.OWL_INVERSE_OF:
-            out.append((d, INVERSE_KEY, [o, s]))
-            out.append((d, INVERSE_KEY, [s, o]))
-        else:  # rdf:type owl:TransitiveProperty
-            out.append((d, TRANSITIVE_KEY, [s, s, s]))
-    out.sort()
-    return out
-
-
 def rule_table(triples: DataFrame) -> DataFrame:
     """``(doc_iri, template_key, slots)`` — one row per rule instance,
     fully distributed (Arrow-batched parse; nothing is collected).
@@ -569,17 +539,15 @@ def rule_table(triples: DataFrame) -> DataFrame:
         import pandas as pd
 
         for pdf in it:
-            out = {"doc_iri": [], "template_key": [], "slots": []}
-            for d, s in zip(pdf["doc_iri"], pdf["obj"]):
-                try:
-                    body, head = _parse_swrl(s)
-                    key, slots = encode_rule(d, body, head)
-                except Exception as e:  # noqa: BLE001 — recorded as a row
-                    key, slots = _INVALID, [f"{type(e).__name__}: {e}", s]
-                out["doc_iri"].append(d)
-                out["template_key"].append(key)
-                out["slots"].append(slots)
-            yield pd.DataFrame(out)
+            docs = pdf["doc_iri"].tolist()
+            enc = [_encode_one(d, s) for d, s in zip(docs, pdf["obj"])]
+            yield pd.DataFrame(
+                {
+                    "doc_iri": docs,
+                    "template_key": [k for k, _ in enc],
+                    "slots": [s for _, s in enc],
+                }
+            )
 
     parsed = srcs.mapInPandas(batches, _RULES_SCHEMA)
 
@@ -612,291 +580,362 @@ def rule_table(triples: DataFrame) -> DataFrame:
     return parsed.unionByName(trans).unionByName(inv_both)
 
 
+def check_rules(triples: DataFrame, on_unsupported: str = "raise") -> None:
+    """Eager, bounded bad-rule diagnostic: collect at most 6 invalid
+    rules (5 to show + 1 to know there are more) and count the rest
+    only then — 10^9 documents with a systematic bad rule must not
+    become an unbounded driver collect. ``"raise"`` fails fast listing
+    them; ``"skip"`` warns (the per-document engine drops them)."""
+    bad_df = rule_table(triples).filter(F.col("template_key") == _INVALID)
+    bad = bad_df.select("doc_iri", "slots").limit(6).collect()
+    if not bad:
+        return
+    n_bad = bad_df.count() if len(bad) >= 6 else len(bad)
+    msgs = [f"{r['doc_iri']}: {r['slots'][0]} in rule {r['slots'][1]!r}" for r in bad[:5]]
+    more = f" (+{n_bad - 5} more)" if n_bad > 5 else ""
+    if on_unsupported == "raise":
+        raise UnsupportedSWRLError("unsupported SWRL fragment: " + "; ".join(msgs) + more)
+    warnings.warn("skipping unsupported SWRL rules: " + "; ".join(msgs) + more)
+
+
 # --------------------------------------------------------------------------
-# evaluation
+# per-document evaluation
 # --------------------------------------------------------------------------
 
 
-def _closure_pairs(triples: DataFrame) -> DataFrame:
-    sub = triples.filter(
-        (F.col("pred") == V.RDFS_SUBCLASSOF)
-        & ~F.col("subj").startswith("_:")
-        & ~F.col("obj").startswith("_:")
-    ).select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
-    return transitive_closure(sub)
+def _bind_rule(key: str, slots: List[str]):
+    """One rule's template with its slot values substituted: constant
+    refs become ``("c", value)``, variables stay ``("v", index)``."""
+    body, head, _ = _parse_template(key)
+
+    def ref(r):
+        return ("c", slots[r[1]]) if r[0] == "c" else r
+
+    bb = []
+    for a in body:
+        kind = a[0]
+        if kind == "bi":
+            bb.append(("bi", _BI_OPS[a[1]], a[2], ref(a[3])))
+        elif kind == "ar":
+            bb.append(("ar", a[1], a[2], ref(a[3]), ref(a[4])))
+        elif kind == "sf":
+            bb.append(("sf", a[1], a[2], [ref(o) for o in a[3]]))
+        elif kind == "sck":
+            bb.append(("sck", _SCK_FN[a[1]], ref(a[2]), ref(a[3])))
+        elif kind == "cls":
+            bb.append(("cls", slots[a[1]], ref(a[2])))
+        else:
+            o = a[3]
+            if o[0] == "c2":
+                o = ("c2", slots[o[1]], slots[o[2]])
+            bb.append(("prop", slots[a[1]], ref(a[2]), o))
+    hh = []
+    for a in head:
+        if a[0] == "cls":
+            hh.append(("cls", slots[a[1]], ref(a[2])))
+        else:
+            o = a[3]
+            if o[0] == "lit":
+                o = ("lit", slots[o[1]], slots[o[2]])
+            hh.append(("prop", slots[a[1]], ref(a[2]), ref(o)))
+    return bb, hh
 
 
-def _closed_types(facts: DataFrame, closure: DataFrame) -> DataFrame:
-    """(doc_iri, inst, cls) with rdfs:subClassOf closure applied."""
-    types = facts.filter(
-        (F.col("pred") == V.RDF_TYPE)
-        & ~F.col("subj").startswith("_:")
-        & ~F.col("obj").startswith("_:")
-    ).select("doc_iri", F.col("subj").alias("inst"), F.col("obj").alias("cls"))
-    inherited = types.join(closure, types.cls == closure.src).select(
-        "doc_iri", "inst", F.col("dst").alias("cls")
-    )
-    return types.unionByName(inherited).distinct()
+def _doc_rules(doc_iri: str, rows) -> list:
+    """The document's rules — SWRL srcs plus rules synthesized from its
+    TransitiveProperty / inverseOf axioms — compiled through the same
+    encode_rule/_parse_template pair the diagnostic uses. Invalid rules
+    are dropped here: check_rules already raised or warned."""
+    srcs, trans, inv = set(), set(), set()
+    for s, p, o, _il, _dt in rows:
+        if p == V.YPO_RULE_SRC:
+            srcs.add(o)
+        elif p == V.RDF_TYPE and o == V.OWL_TRANSITIVE:
+            trans.add(s)
+        elif p == V.OWL_INVERSE_OF:
+            inv.add((s, o))
+    enc = [_encode_one(doc_iri, src) for src in sorted(srcs)]
+    enc += [(TRANSITIVE_KEY, [p, p, p]) for p in sorted(trans)]
+    for q, p in sorted(inv):
+        enc += [(INVERSE_KEY, [p, q]), (INVERSE_KEY, [q, p])]
+    return [_bind_rule(k, s) for k, s in enc if k != _INVALID]
 
 
-def _subclass_closed_types(triples: DataFrame) -> DataFrame:
-    return _closed_types(triples, _closure_pairs(triples))
+_I64 = 2**63
 
 
-def _eval_template(
-    key: str,
-    rules: DataFrame,
-    facts: DataFrame,
-    types: DataFrame,
-    delta: DataFrame = None,
-    types_delta: DataFrame = None,
-    live_positions: list = None,
-) -> DataFrame:
-    """One join pipeline evaluating EVERY rule of this template across
-    all documents at once; rule slots ride along as columns.
-
-    Semi-naive mode (``delta`` given): returns the union over body-atom
-    positions i of the plan where atom i reads the DELTA — property
-    atoms read the round's new FACTS, class atoms the round's new
-    closed TYPES — and the other atoms read the full sets. A binding
-    is re-derived this round only if at least one body atom matches
-    something new, so round cost tracks |delta| for EVERY template
-    shape, including class-atom bodies (classic semi-naive Datalog;
-    the r2 verdict's full-re-evaluation fallback is gone)."""
-    body, head, n_slots = _parse_template(key)
-    if delta is not None:
-        outs = [
-            _eval_template_once(key, body, head, n_slots, rules, facts, types, delta, j)
-            for j, a in enumerate(body)
-            if a[0] == "prop"
-            and (live_positions is None or j in live_positions)
-        ]
-        if types_delta is not None:
-            outs.extend(
-                _eval_template_once(
-                    key, body, head, n_slots, rules, facts, types, None, -1,
-                    types_delta=types_delta, types_delta_pos=j,
-                )
-                for j, a in enumerate(body)
-                if a[0] == "cls"
-            )
-        if not outs:
-            # either the body is all class atoms with no type-inferring
-            # template in play (types_delta is None), or relevance
-            # filtering proved every delta-position plan empty:
-            # nothing can re-trigger this rule this round — return None
-            # so the caller skips it (building even a limit(0) plan
-            # costs py4j round-trips and optimizer time per round)
-            return None
-        return reduce(lambda a, c: a.unionByName(c), outs)
-    return _eval_template_once(key, body, head, n_slots, rules, facts, types, None, -1)
+def _int(x):
+    """try_cast(x AS BIGINT): the integer, or None (the row drops)."""
+    try:
+        v = int(x)
+    except (TypeError, ValueError):
+        return None
+    return v if -_I64 <= v < _I64 else None
 
 
-def _eval_template_once(
-    key, body, head, n_slots, rules, facts, types, delta, delta_pos,
-    types_delta=None, types_delta_pos=-1,
-) -> DataFrame:
-    # The pipeline is composed from SQL-string expressions (filter/
-    # selectExpr/F.expr), ONE py4j round-trip per condition or select —
-    # composing the same plan from Column objects costs a JVM socket
-    # call per `F.col`/`&`/`==`/`.alias` (~20k per round across the
-    # template × delta-position variants, ~2.5s of pure driver latency,
-    # measured). Column references are name-based and never collide:
-    # the b side owns doc_iri/_s*/v*, the fact/type side is renamed to
-    # __* before every join. Slot VALUES stay data (join columns);
-    # only fixed identifiers and the template's structure reach SQL.
-    b = rules.filter(f"template_key = '{key}'").selectExpr(
-        "doc_iri", *[f"slots[{i}] AS _s{i}" for i in range(n_slots)]
-    )
-    bcols = ["doc_iri"] + [f"_s{i}" for i in range(n_slots)]
-    bound: set = set()
-    for atom_idx, atom in enumerate(body):
-        if atom[0] == "bi":
-            _, op, vi, rhs = atom
-            sign = _BI_SQL[op]
-            rexpr = f"_s{rhs[1]}" if rhs[0] == "c" else f"v{rhs[1]}"
-            # try_cast: a non-numeric binding DROPS OUT of the builtin
-            # comparison (matching the sequential oracle's
-            # skip-on-ValueError) — ANSI mode's plain cast would kill
-            # the whole fixpoint job instead
-            b = b.filter(f"try_cast(v{vi} as double) {sign} try_cast({rexpr} as double)")
-            continue
-        if atom[0] == "ar":
-            _, op, outv, o1, o2 = atom
-            es = [
-                f"try_cast({'_s' if k == 'c' else 'v'}{i} AS BIGINT)"
-                for k, i in (o1, o2)
-            ]
-            expr = f"{_AR_SQL[op]}({es[0]}, {es[1]})"
-            if outv in bound:
-                # check form: the result variable was bound earlier
-                b = b.filter(f"try_cast(v{outv} AS BIGINT) = {expr}")
+def _arith(op, a, b):
+    """try_add/try_subtract/try_multiply/try_mod over BIGINT: None on
+    overflow or mod-by-zero; mod truncates like Java's %."""
+    if op == "ad":
+        r = a + b
+    elif op == "sb":
+        r = a - b
+    elif op == "ml":
+        r = a * b
+    elif b == 0:
+        return None
+    else:
+        r = abs(a) % abs(b)
+        r = -r if a < 0 else r
+    return r if -_I64 <= r < _I64 else None
+
+
+def _strfn(op, vals):
+    """String builtin result, or None where the row drops."""
+    if op == "sc":
+        return "".join(vals)
+    if op == "sl":
+        return str(len(vals[0]))
+    if op == "uc":
+        return vals[0].upper()
+    if op == "lc":
+        return vals[0].lower()
+    if op == "bn":
+        return {"true": "false", "1": "false", "false": "true", "0": "true"}.get(vals[0])
+    # substring, XPath integer fragment: positions p with p >= start and
+    # p < start + length (1-based); drops wherever a BIGINT/INT bound
+    # overflows or an argument is not integral
+    st = _int(vals[1])
+    if st is None:
+        return None
+    lo = max(st, 1)
+    if len(vals) == 2:
+        return vals[0][lo - 1:] if lo < 2**31 else None
+    ln = _int(vals[2])
+    if ln is None:
+        return None
+    hi = st + ln
+    if not -_I64 <= hi < _I64:
+        return None
+    n = hi - lo
+    if n <= 0:
+        return ""
+    if lo >= 2**31 or n >= 2**31:
+        return None
+    return vals[0][lo - 1: lo - 1 + n]
+
+
+class _Facts:
+    """Predicate-indexed facts: ``pred -> [(s, o, il)]`` and
+    ``(pred, s) -> [(o, il)]``."""
+
+    __slots__ = ("by_p", "by_ps")
+
+    def __init__(self, rows=()):
+        self.by_p, self.by_ps = {}, {}
+        for r in rows:
+            self.add(r)
+
+    def add(self, r):
+        s, p, o, il = r[0], r[1], r[2], r[3]
+        self.by_p.setdefault(p, []).append((s, o, il))
+        self.by_ps.setdefault((p, s), []).append((o, il))
+
+
+class _Types:
+    """Closed class memberships: ``inst -> {cls}`` and ``cls -> [inst]``."""
+
+    __slots__ = ("by_inst", "by_cls")
+
+    def __init__(self):
+        self.by_inst, self.by_cls = {}, {}
+
+    def add(self, inst, cls) -> bool:
+        cs = self.by_inst.setdefault(inst, set())
+        if cls in cs:
+            return False
+        cs.add(cls)
+        self.by_cls.setdefault(cls, []).append(inst)
+        return True
+
+
+def _val(ref, b):
+    return ref[1] if ref[0] == "c" else b[ref[1]]
+
+
+def _fire(body, head, facts, types, out, pos=-1, dfacts=None, dtypes=None):
+    """Enumerate the rule's bindings in body order — atom ``pos`` reads
+    the round's delta (facts or types), every other atom the full
+    sets — and add the head facts to ``out``. Variables bind in index
+    order (encode_rule numbers them by first appearance), so the
+    bound/new split is ``index < len(binding)``."""
+    binds = [()]
+    for j, atom in enumerate(body):
+        if not binds:
+            return
+        kind = atom[0]
+        k = len(binds[0])
+        if kind == "prop":
+            _, p, ss, os_ = atom
+            src = dfacts if j == pos else facts
+            s_new = ss[0] == "v" and ss[1] >= k
+            if os_[0] == "c2":
+                o_mode = 0
+            elif os_[1] < k:
+                o_mode = 1  # bound variable
+            elif s_new and os_[1] == ss[1]:
+                o_mode = 2  # p(?x, ?x) with ?x new
             else:
-                # binding form: compute, DROP NULL results (non-integral
-                # operand, overflow, mod-by-zero), bind the lexical form
-                bound.add(outv)
-                b = (
-                    b.selectExpr(*bcols, f"CAST({expr} AS STRING) AS v{outv}")
-                    .filter(f"v{outv} IS NOT NULL")
-                )
-                bcols.append(f"v{outv}")
-            continue
-        if atom[0] == "sf":
-            _, op, outv, ops = atom
-            es = [f"{'_s' if k == 'c' else 'v'}{i}" for k, i in ops]
-            if op == "sc":
-                expr = f"concat({', '.join(es)})"
-            elif op == "sl":
-                expr = f"CAST(length({es[0]}) AS STRING)"
-            elif op == "uc":
-                expr = f"upper({es[0]})"
-            elif op == "ss":
-                # XPath integer substring: keep positions p with
-                # p >= start and p < start + length (1-based). All
-                # bound checks go through try_cast/try_add so a
-                # non-integral binding or an INT-range overflow
-                # yields NULL — dropped below, never an ANSI error.
-                stc = f"try_cast({es[1]} AS BIGINT)"
-                base = f"greatest({stc}, 1)"
-                if len(es) == 3:
-                    lnc = f"try_cast({es[2]} AS BIGINT)"
-                    n = f"try_subtract(try_add({stc}, {lnc}), {base})"
-                    expr = (
-                        f"CASE WHEN {n} <= 0 THEN '' "
-                        f"ELSE substring({es[0]}, try_cast({base} AS INT), "
-                        f"try_cast({n} AS INT)) END"
-                    )
+                o_mode = 3  # new variable
+            nb = []
+            for b in binds:
+                if s_new:
+                    cands = src.by_p.get(p, ())
                 else:
-                    # greatest() IGNORES NULLs, so a failed start cast
-                    # must be caught explicitly or it silently becomes 1
-                    expr = (
-                        f"CASE WHEN {stc} IS NULL THEN NULL "
-                        f"ELSE substring({es[0]}, try_cast({base} AS INT)) END"
-                    )
-            elif op == "bn":
-                # boolean lexicals only; anything else yields NULL and
-                # the row drops (comparison-builtin skip semantics)
-                expr = (
-                    f"CASE WHEN {es[0]} IN ('true', '1') THEN 'false' "
-                    f"WHEN {es[0]} IN ('false', '0') THEN 'true' END"
-                )
-            else:
-                expr = f"lower({es[0]})"
-            if outv in bound:
-                b = b.filter(f"v{outv} = {expr}")
-            else:
-                bound.add(outv)
-                b = b.selectExpr(*bcols, f"{expr} AS v{outv}")
-                if op in ("ss", "bn"):
-                    b = b.filter(f"v{outv} IS NOT NULL")
-                bcols.append(f"v{outv}")
-            continue
-        if atom[0] == "sck":
-            _, op, o1, o2 = atom
-            e1, e2 = (f"{'_s' if k == 'c' else 'v'}{i}" for k, i in (o1, o2))
-            b = b.filter(f"{_SCK_SQL[op]}({e1}, {e2})")
-            continue
-        if atom[0] == "cls":
-            _, cls_slot, inst = atom
-            t_src = types_delta if atom_idx == types_delta_pos else types
-            t = t_src.selectExpr(
-                "doc_iri AS __d", "inst AS __i", "cls AS __c"
-            )
-            conds = ["doc_iri = __d", f"__c = _s{cls_slot}"]
-            newv = None
+                    s = _val(ss, b)
+                    cands = [(s, o, il) for o, il in src.by_ps.get((p, s), ())]
+                hits = []
+                for s, o, il in cands:
+                    if o_mode == 0:
+                        if o != (os_[1] if il else os_[2]):
+                            continue
+                    elif o_mode == 1:
+                        if o != b[os_[1]]:
+                            continue
+                    elif o_mode == 2 and o != s:
+                        continue
+                    hits.append((s, o))
+                if not s_new and o_mode != 3:
+                    if hits:
+                        nb.append(b)  # pure filter: a semi-join
+                    continue
+                for s, o in hits:
+                    t = b + (s,) if s_new else b
+                    nb.append(t + (o,) if o_mode == 3 else t)
+            binds = nb
+        elif kind == "cls":
+            _, cls, inst = atom
+            src = dtypes if j == pos else types
             if inst[0] == "c":
-                conds.append(f"__i = _s{inst[1]}")
-            elif inst[1] in bound:
-                conds.append(f"__i = v{inst[1]}")
+                if cls not in src.by_inst.get(inst[1], ()):
+                    binds = []
+            elif inst[1] < k:
+                binds = [b for b in binds if cls in src.by_inst.get(b[inst[1]], ())]
             else:
-                newv = inst[1]
-            cond = F.expr(" AND ".join(conds))
-            if newv is None:
-                # pure filter: semi-join — no duplication, no dedup pass
-                b = b.join(t, cond, "left_semi")
-            else:
-                bound.add(newv)
-                b = b.join(t, cond).selectExpr(*bcols, f"__i AS v{newv}")
-                bcols.append(f"v{newv}")
-            continue
-        _, pred_slot, ssub, osub = atom
-        src = delta if (delta is not None and atom_idx == delta_pos) else facts
-        fa = src.selectExpr(
-            "doc_iri AS __d",
-            "pred AS __p",
-            "subj AS __s",
-            "obj AS __o",
-            "obj_is_literal AS __ol",
-        )
-        conds = ["doc_iri = __d", f"__p = _s{pred_slot}"]
-        newvars = []
-        if ssub[0] == "c":
-            conds.append(f"__s = _s{ssub[1]}")
-        elif ssub[1] in bound:
-            conds.append(f"__s = v{ssub[1]}")
-        else:
-            newvars.append((ssub[1], "__s"))
-        if osub[0] == "c2":
-            conds.append(f"IF(__ol, __o = _s{osub[1]}, __o = _s{osub[2]})")
-        elif osub[1] in bound:
-            conds.append(f"__o = v{osub[1]}")
-        elif any(vi == osub[1] for vi, _ in newvars):
-            # p(?x, ?x): same unbound var in both slots of one atom
-            conds.append("__o = __s")
-        else:
-            newvars.append((osub[1], "__o"))
-        cond = F.expr(" AND ".join(conds))
-        if not newvars:
-            # pure filter: semi-join — one matching fact is enough, and
-            # multiplicities never duplicate bindings (the per-atom
-            # distinct this replaces was a shuffle per atom per variant)
-            b = b.join(fa, cond, "left_semi")
-        else:
-            bound.update(vi for vi, _ in newvars)
-            b = b.join(fa, cond).selectExpr(
-                *bcols, *[f"{srcc} AS v{vi}" for vi, srcc in newvars]
-            )
-            bcols.extend(f"v{vi}" for vi, _ in newvars)
+                members = src.by_cls.get(cls, ())
+                binds = [b + (x,) for b in binds for x in members]
+        elif kind == "bi":
+            _, fn, vi, rhs = atom
+            nb = []
+            for b in binds:
+                try:
+                    if fn(float(b[vi]), float(_val(rhs, b))):
+                        nb.append(b)
+                except ValueError:
+                    pass  # non-numeric binding: drops out (try_cast NULL)
+            binds = nb
+        elif kind == "ar":
+            _, op, outv, o1, o2 = atom
+            nb = []
+            for b in binds:
+                x, y = _int(_val(o1, b)), _int(_val(o2, b))
+                r = None if x is None or y is None else _arith(op, x, y)
+                if r is None:
+                    continue
+                if outv >= k:
+                    nb.append(b + (str(r),))
+                elif _int(b[outv]) == r:
+                    nb.append(b)
+            binds = nb
+        elif kind == "sf":
+            _, op, outv, ops = atom
+            nb = []
+            for b in binds:
+                r = _strfn(op, [_val(o, b) for o in ops])
+                if r is None:
+                    continue
+                if outv >= k:
+                    nb.append(b + (r,))
+                elif b[outv] == r:
+                    nb.append(b)
+            binds = nb
+        else:  # sck
+            _, fn, o1, o2 = atom
+            binds = [b for b in binds if fn(_val(o1, b), _val(o2, b))]
 
-    outs = []
-    for atom in head:
-        if atom[0] == "cls":
-            _, cls_slot, inst = atom
-            subj = f"v{inst[1]}" if inst[0] == "v" else f"_s{inst[1]}"
-            outs.append(
-                b.selectExpr(
-                    f"{subj} AS subj",
-                    f"'{V.RDF_TYPE}' AS pred",
-                    f"_s{cls_slot} AS obj",
-                    "false AS obj_is_literal",
-                    "CAST(NULL AS STRING) AS obj_datatype",
-                    "doc_iri",
-                )
-            )
-        else:
-            _, pred_slot, ssub, osub = atom
-            subj = f"v{ssub[1]}" if ssub[0] == "v" else f"_s{ssub[1]}"
-            if osub[0] == "v":
-                obj, il, dt = f"v{osub[1]}", "false", "CAST(NULL AS STRING)"
-            elif osub[0] == "lit":
-                obj, il, dt = f"_s{osub[1]}", "true", f"_s{osub[2]}"
+    for b in binds:
+        for atom in head:
+            if atom[0] == "cls":
+                out.add((_val(atom[2], b), V.RDF_TYPE, atom[1], False, None))
+                continue
+            _, p, ss, os_ = atom
+            if os_[0] == "lit":
+                out.add((_val(ss, b), p, os_[1], True, os_[2]))
             else:
-                obj, il, dt = f"_s{osub[1]}", "false", "CAST(NULL AS STRING)"
-            outs.append(
-                b.selectExpr(
-                    f"{subj} AS subj",
-                    f"_s{pred_slot} AS pred",
-                    f"{obj} AS obj",
-                    f"{il} AS obj_is_literal",
-                    f"{dt} AS obj_datatype",
-                    "doc_iri",
-                )
-            )
-    # no per-head distinct: the caller's single union-wide distinct
-    # dedups with map-side partial aggregation — one shuffle instead of
-    # one per head per variant (duplicates collapse in the combiner
-    # before they ever hit the wire)
-    return reduce(lambda a, c: a.unionByName(c), outs)
+                out.add((_val(ss, b), p, _val(os_, b), False, None))
+
+
+def forward_chain_doc(doc_iri: str, rows, max_iter: int = 15) -> set:
+    """The inferred delta of ONE document, as (subj, pred, obj,
+    obj_is_literal, obj_datatype) tuples: semi-naive rounds over
+    predicate-indexed facts. Round 0 fires every rule over everything;
+    a later round fires a rule once per body atom that can read the
+    previous round's delta (a property atom whose predicate the delta
+    carries, a class atom when new memberships appeared), so round cost
+    tracks the delta. Class atoms read rdf:type closed under the
+    document's own rdfs:subClassOf. At most ``max_iter`` rounds."""
+    rows = list(rows)
+    rules = _doc_rules(doc_iri, rows)
+    if not rules:
+        return set()
+    base = {r for r in rows if not r[0].startswith("_:") and not r[2].startswith("_:")}
+    edges: dict = {}
+    for s, p, o, _il, _dt in base:
+        if p == V.RDFS_SUBCLASSOF:
+            edges.setdefault(s, set()).add(o)
+    sup: dict = {}
+    for start, nxt in edges.items():
+        seen, stack = set(), list(nxt)
+        while stack:
+            n = stack.pop()
+            if n not in seen:
+                seen.add(n)
+                stack.extend(edges.get(n, ()))
+        sup[start] = seen
+
+    def close_types(new_facts, types):
+        added = _Types()
+        for s, p, o, _il, _dt in new_facts:
+            if p == V.RDF_TYPE:
+                for c in (o, *sup.get(o, ())):
+                    if types.add(s, c):
+                        added.add(s, c)
+        return added
+
+    known = set(base)
+    facts, types = _Facts(base), _Types()
+    close_types(base, types)
+    dfacts = dtypes = None
+    for rnd in range(max_iter):
+        new: set = set()
+        for body, head in rules:
+            if rnd == 0:
+                _fire(body, head, facts, types, new)
+                continue
+            for j, a in enumerate(body):
+                if (a[0] == "prop" and a[1] in dfacts.by_p) or (
+                    a[0] == "cls" and a[1] in dtypes.by_cls
+                ):
+                    _fire(body, head, facts, types, new, j, dfacts, dtypes)
+        new -= known
+        if not new:
+            break
+        known |= new
+        dfacts = _Facts(new)
+        for r in new:
+            facts.add(r)
+        dtypes = close_types(new, types)
+    return known - base
 
 
 def forward_chain(
@@ -904,246 +943,10 @@ def forward_chain(
 ) -> DataFrame:
     """Returns the INFERRED facts (subj, pred, obj, obj_is_literal,
     obj_datatype, doc_iri) — the delta the Pellet step would add for
-    the supported fragment. Fixpoint: rounds of template-grouped rule
-    application until no new facts; lineage cut per round. Driver work
-    per round is O(#distinct templates), independent of document count.
+    the supported fragment: :func:`forward_chain_doc` per document in
+    one grouped map on ``doc_iri``.
 
     ``on_unsupported``: "raise" (default) fails fast listing the bad
     rules; "skip" drops them with a warning."""
-    spark = triples.sparkSession
-
-    fact_cols = ["subj", "pred", "obj", "obj_is_literal", "obj_datatype", "doc_iri"]
-    base = (
-        triples.filter(~F.col("subj").startswith("_:") & ~F.col("obj").startswith("_:"))
-        .select(*fact_cols)
-        .distinct()
-    )
-
-    local_rules = _rule_rows_local(triples)
-    if local_rules is not None:
-        # driver-rules regime: the rule list is already on the driver —
-        # the bad-rule diagnostic, template list and relevance index
-        # need no further jobs; the joins below read the local relation
-        bad = [(d, slots) for d, k, slots in local_rules if k == _INVALID]
-        if bad:
-            n_bad = len(bad)
-            msgs = [f"{d}: {slots[0]} in rule {slots[1]!r}" for d, slots in bad[:5]]
-            more = f" (+{n_bad - 5} more)" if n_bad > 5 else ""
-            if on_unsupported == "raise":
-                raise UnsupportedSWRLError(
-                    "unsupported SWRL fragment: " + "; ".join(msgs) + more
-                )
-            warnings.warn("skipping unsupported SWRL rules: " + "; ".join(msgs) + more)
-            local_rules = [r for r in local_rules if r[1] != _INVALID]
-        distinct_pairs = sorted(
-            {(k, tuple(slots)) for _, k, slots in local_rules}
-        )
-        # ship back through the Arrow path (pandas → LocalTableScan,
-        # JVM-resident — a tuple-list createDataFrame plans as a
-        # pickled Python RDD re-run on every downstream action) and
-        # checkpoint once: the fixpoint joins read it per template per
-        # round
-        import pandas as pd
-
-        rules = spark.createDataFrame(
-            pd.DataFrame(
-                [(d, k, list(s)) for d, k, s in local_rules],
-                columns=["doc_iri", "template_key", "slots"],
-            ),
-            schema=_RULES_SCHEMA,
-        ).localCheckpoint()
-    else:
-        rules = rule_table(triples).localCheckpoint()
-        # bounded diagnostic: collect at most 6 bad rules (5 to show +
-        # 1 to know there are more), never the full set — 10^9
-        # documents with a systematic bad rule must not become an
-        # unbounded driver collect
-        bad_df = rules.filter(F.col("template_key") == _INVALID).select(
-            "doc_iri", "slots"
-        )
-        bad = bad_df.limit(6).collect()
-        if bad:
-            n_bad = bad_df.count() if len(bad) >= 6 else len(bad)
-            msgs = [
-                f"{r['doc_iri']}: {r['slots'][0]} in rule {r['slots'][1]!r}"
-                for r in bad[:5]
-            ]
-            more = f" (+{n_bad - 5} more)" if n_bad > 5 else ""
-            if on_unsupported == "raise":
-                raise UnsupportedSWRLError(
-                    "unsupported SWRL fragment: " + "; ".join(msgs) + more
-                )
-            warnings.warn("skipping unsupported SWRL rules: " + "; ".join(msgs) + more)
-            rules = rules.filter(F.col("template_key") != _INVALID)
-
-        # ONE bounded collect serves both the template list and the
-        # relevance index below (r7 — the template list was a second
-        # distinct+collect over the same checkpointed rules)
-        distinct_pairs = sorted(
-            {
-                (r["template_key"], tuple(r["slots"]))
-                for r in rules.filter(F.col("template_key") != _INVALID)
-                .select("template_key", "slots")
-                .distinct()
-                .collect()
-            }
-        )
-    templates = sorted({k for k, _ in distinct_pairs})
-    if not templates:
-        return arrow_local_df(spark, [], base.schema)
-
-    # derive the closure and type tables from the CHECKPOINTED fact
-    # base, not the raw triple table (r7, guide §2.2): both operators
-    # filter out blank-node participants themselves, and base is
-    # exactly the distinct non-blank triples — identical inputs, but
-    # the scans read the tiny materialized snapshot instead of
-    # re-scanning and re-shuffling the full parse twice. (The rule
-    # probe above must NOT do this: anonymous Inverse(p) blank nodes
-    # legitimately carry owl:inverseOf rows.)
-    facts = base.localCheckpoint()
-    closure = _closure_pairs(facts).localCheckpoint()
-    types = _closed_types(facts, closure).localCheckpoint()
-    had_type_heads = any("T(" in k.split("=>")[1] for k in templates)
-
-    # data-driven join-strategy dispatch (r7, guide §3.1): ONE count on
-    # the checkpointed base decides whether the fact/type sides of the
-    # per-atom joins fit a broadcast. When they do, every atom join
-    # compiles to a BroadcastHashJoin over ONE reused broadcast instead
-    # of a sort-merge join — on the bench corpus that removes ~30 AQE
-    # shuffle-stage jobs per fixpoint round (the dominant cost of a
-    # tiny-data fixpoint is job count, not bytes). The bound is in rows
-    # of the ~150-byte fact tuple (~15 MB at the threshold, inside the
-    # session's 64 MB autoBroadcastJoinThreshold with headroom for the
-    # per-round delta growth); a corpus past the bound keeps the
-    # shuffle plans unchanged — this is measured-size dispatch, not a
-    # local-mode constant.
-    broadcast_facts = facts.count() <= _BROADCAST_FACT_ROWS
-
-    def _b(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if (broadcast_facts and df is not None) else df
-
-    def _minus(a: DataFrame, b: DataFrame) -> DataFrame:
-        # null-safe anti-join: obj_datatype is NULL for non-literals
-        # and a plain equi-join would never match NULLs
-        cond = None
-        aa, bb = a.alias("a"), b.alias("b")
-        for c in fact_cols:
-            eq = F.col(f"a.{c}").eqNullSafe(F.col(f"b.{c}"))
-            cond = eq if cond is None else cond & eq
-        return aa.join(bb, cond, "left_anti").select(*fact_cols)
-
-    # driver-side relevance index (r4, datalog relevance filtering):
-    # for each (template, prop-atom position), the set of predicate
-    # IRIs any rule of that template binds at that slot. One bounded
-    # job — the result is ≤ #templates × #distinct properties rows no
-    # matter the corpus size. In rounds ≥ 1 a delta-position plan whose
-    # atom cannot bind ANY delta predicate is provably empty (the plan
-    # joins that atom against the delta on pred = slot), so it is
-    # skipped instead of scheduled.
-    atom_preds: dict = {}
-    if templates:
-        # slot extraction per template shape happens driver-side on the
-        # bounded distinct-rule set collected above (r4 built this as a
-        # union of one filter-scan per prop atom — ~2× the whole
-        # index's cost in scheduling alone)
-        shapes = {k: _parse_template(k)[0] for k in templates}
-        for key, slots in distinct_pairs:
-            tbody = shapes.get(key)
-            if tbody is None:
-                continue
-            for j, a in enumerate(tbody):
-                if a[0] == "prop":
-                    atom_preds.setdefault((key, j), set()).add(slots[a[1]])
-
-    # semi-naive: round 1 seeds with a full evaluation; later rounds
-    # re-join only bindings touching at least one new fact (property
-    # atoms read the facts delta) or one new closed type (class atoms
-    # read the TYPES delta — the r2 verdict's full-re-evaluation
-    # fallback for class-atom templates is replaced by maintaining the
-    # type closure incrementally, so round cost tracks |delta| for all
-    # template shapes).
-    delta = facts
-    delta_preds: set = set()
-    types_delta = None
-    inferred_acc = None
-    for rnd in range(max_iter):
-        if rnd == 0:
-            outs = [
-                _eval_template(k, rules, _b(facts), _b(types), delta=None, types_delta=None)
-                for k in templates
-            ]
-        else:
-            # delta_preds was computed by the SAME action that
-            # materialized the delta checkpoint (below) — no extra
-            # driver round-trip per round (the r4 regression)
-            outs = []
-            for k in templates:
-                live = [
-                    j
-                    for (tk, j), preds in atom_preds.items()
-                    if tk == k and preds & delta_preds
-                ]
-                out = _eval_template(
-                    k, rules, _b(facts), _b(types),
-                    delta=_b(delta), types_delta=_b(types_delta),
-                    live_positions=live,
-                )
-                if out is not None:
-                    outs.append(out)
-            if not outs:
-                # every template is provably dead this round
-                break
-        new = reduce(lambda a, c: a.unionByName(c), outs).distinct()
-        # lazy checkpoints + ONE action per round: the tagged-union
-        # aggregate below materializes the delta checkpoint AND (for
-        # type-head rule sets) the types-delta checkpoint, returning
-        # the delta's predicate set and the types-delta row count
-        # together (pred is never NULL, so empty set <=> empty delta;
-        # collect_set skips the NULL-pred tag rows) — replaces the
-        # separate per-round types_delta.count() action (r7)
-        delta = _minus(new, _b(facts)).localCheckpoint(eager=False)
-        if had_type_heads:
-            # inferred class memberships must feed later class atoms —
-            # close only the DELTA's types and anti-join against the
-            # known set: the increment is what class atoms re-join on
-            types_delta = (
-                _closed_types(delta, closure)
-                .join(types, ["doc_iri", "inst", "cls"], "left_anti")
-                .localCheckpoint(eager=False)
-            )
-            row = (
-                delta.select("pred", F.lit(1).alias("__d"))
-                .unionByName(
-                    types_delta.select(
-                        F.lit(None).cast("string").alias("pred"),
-                        F.lit(0).alias("__d"),
-                    )
-                )
-                .agg(
-                    F.collect_set(F.when(F.col("__d") == 1, F.col("pred"))).alias("p"),
-                    F.sum(F.lit(1) - F.col("__d")).alias("nt"),
-                )
-                .head()
-            )
-            delta_preds = set(row["p"])
-            n_types_delta = row["nt"] or 0
-        else:
-            delta_preds = set(delta.agg(F.collect_set("pred")).head()[0])
-            n_types_delta = 0
-        if not delta_preds:
-            break
-        # facts/types are unions of already-checkpointed frames: lineage
-        # stays depth-1 without their own checkpoint jobs (2 fewer
-        # materializations per round than r2)
-        facts = facts.unionByName(delta)
-        inferred_acc = delta if inferred_acc is None else inferred_acc.unionByName(delta)
-        if had_type_heads and n_types_delta:
-            types = types.unionByName(types_delta)
-        else:
-            # no new closed types: class-atom delta plans would all be
-            # empty — skip them next round
-            types_delta = None
-
-    if inferred_acc is None:
-        return arrow_local_df(spark, [], base.schema)
-    return inferred_acc.distinct()
+    check_rules(triples, on_unsupported)
+    return doc_grouped_map(triples, lambda d, rows: forward_chain_doc(d, rows, max_iter))

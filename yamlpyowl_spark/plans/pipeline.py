@@ -242,32 +242,21 @@ class KGPipeline:
 
     def reasoned(self, triples: DataFrame) -> DataFrame:
         """Inferred-facts delta for the given triples: SWRL forward
-        chain (template-grouped, semi-naive) + DL model search (OneOf/
-        Functional/AllDifferent CSP per document). Both are doc-scoped,
-        so running them per materialize-run over only the NEW documents
-        is complete — inference never crosses ``doc_iri``. Unsupported
-        SWRL rules are skipped with a warning (a single bad rule must
-        not abort a batch)."""
-        from ..operators.dlreason import dl_model_search
-        from ..operators.isomorph import reason_per_isomorph
-        from ..operators.owlrl import owlrl_materialize
-        from ..operators.swrl import forward_chain
+        chain (semi-naive, per document) + DL model search (OneOf/
+        Functional/AllDifferent CSP per document) + OWL-RL rules, all
+        three in ONE grouped-map pass on ``doc_iri``. The corpus is
+        fingerprinted once and reasoned once per content-isomorphism
+        class (a fork-heavy corpus — thousands of IRI-rewritten copies
+        per document, the web-scale shape — pays O(distinct contents),
+        not O(docs)); the output is then instantiated for every member
+        document. Every engine is doc-scoped, so running this per
+        materialize-run over only the NEW documents is complete —
+        inference never crosses ``doc_iri``. Unsupported SWRL rules are
+        skipped with a warning (a single bad rule must not abort a
+        batch)."""
+        from ..operators.isomorph import reason_all
 
-        base = triples.select(
-            "subj", "pred", "obj", "obj_is_literal", "obj_datatype", "doc_iri"
-        )
-        # the per-document Python engines (CSP solve, rule pass) run
-        # ONCE per content-isomorphism class — a fork-heavy corpus
-        # (thousands of IRI-rewritten copies per document, the
-        # web-scale shape) pays O(distinct contents), not O(docs); the
-        # r6 10x soak measured ~25k isomorphic zebra CSP solves
-        # dominating the reasoning wall-clock before this
-        return (
-            forward_chain(base, on_unsupported="skip")
-            .unionByName(reason_per_isomorph(base, dl_model_search))
-            .unionByName(reason_per_isomorph(base, owlrl_materialize))
-            .distinct()
-        )
+        return reason_all(triples, swrl_on_unsupported="skip")
 
     # ------------------------------------------------------------------
     # checkpointed materialization (resume = anti-join against _progress)

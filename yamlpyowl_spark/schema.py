@@ -93,3 +93,36 @@ def arrow_local_df(spark, rows, schema):
         )
     # plain column-name list: keep the tuple path's type inference
     return spark.createDataFrame(pd.DataFrame(rows, columns=list(schema)))
+
+
+FACT_COLS = [f.name for f in TRIPLE_FIELDS]
+
+
+def doc_grouped_map(facts, fn):
+    """One ``applyInPandas`` grouped on ``doc_iri``: ``fn(doc_iri,
+    rows)`` gets the document's (subj, pred, obj, obj_is_literal,
+    obj_datatype) tuples and returns output tuples of the same shape;
+    the result carries the fact schema.
+
+    The input is hash-partitioned on ``doc_iri`` to the session's
+    parallelism first, as the parse repartitions before its UDF: the
+    per-document Python CPU is invisible to AQE's byte-based partition
+    coalescing, which would otherwise fold a small fact table — and
+    every document's reasoning with it — into one task."""
+    n = facts.sparkSession.sparkContext.defaultParallelism
+
+    def per_doc(pdf):
+        import pandas as pd
+
+        doc_iri = pdf["doc_iri"].iloc[0]
+        rows = zip(*(pdf[c].tolist() for c in FACT_COLS[:5]))
+        return pd.DataFrame(
+            [(*t, doc_iri) for t in fn(doc_iri, rows)], columns=FACT_COLS
+        )
+
+    return (
+        facts.select(*FACT_COLS)
+        .repartition(n, "doc_iri")
+        .groupBy("doc_iri")
+        .applyInPandas(per_doc, T.StructType(TRIPLE_FIELDS))
+    )

@@ -242,26 +242,6 @@ def test_skew_spread_across_partitions(spark, import_map, tmp_path_factory):
     assert max(docs) <= 3 * (sum(docs) / len(docs))
 
 
-def test_star_cc_equals_propagation_cc(spark):
-    """Alternating large/small-star CC must agree with min-label
-    propagation on seeded random graphs (incl. a long chain, the
-    propagation worst case)."""
-    import random
-
-    from yamlpyowl_spark.operators import connected_components_star
-
-    rng = random.Random(7)
-    nodes = [f"n{i:03d}" for i in range(120)]
-    edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(90)]
-    edges += [(f"c{i:03d}", f"c{i + 1:03d}") for i in range(40)]  # chain
-    df = spark.createDataFrame(edges, ["src", "dst"]).filter(F.col("src") != F.col("dst"))
-    a = {r["node"]: r["component"] for r in connected_components(df).collect()}
-    b = {r["node"]: r["component"] for r in connected_components_star(df).collect()}
-    assert a == b
-    # the 41-node chain collapses to one component rooted at its minimum
-    assert b["c040"] == "c000"
-
-
 def test_materialize_with_reasoning(spark, pipe, source, tmp_path_factory):
     """materialize(reason=True) writes a per-run inferred table: SWRL
     chain facts (regional rules) and the DL solution (zebra), with the
@@ -364,13 +344,14 @@ def test_transitive_closure_doubling_deep_chain(spark):
     assert got == want
 
 
-def test_transitive_closure_driver_regime_matches_distributed(spark):
+def test_transitive_closure_driver_regime_matches_distributed(spark, monkeypatch):
     """The measured-tiny driver-BFS regime must return the exact pair
     set of the distributed loops — including cycles (a node reaches
     itself only via a real cycle) and self-loops — and the regime
     dispatch must be invisible at the boundary."""
     import random
 
+    from yamlpyowl_spark import schema
     from yamlpyowl_spark.operators import closure as C
 
     random.seed(7)
@@ -382,53 +363,106 @@ def test_transitive_closure_driver_regime_matches_distributed(spark):
     for edges in cases:
         df = spark.createDataFrame(edges, "src string, dst string")
         fast = {(r["src"], r["dst"]) for r in transitive_closure(df).collect()}
-        old = C._DRIVER_CLOSURE_EDGES
-        C._DRIVER_CLOSURE_EDGES = 0  # force the distributed loops
-        try:
+        with monkeypatch.context() as m:
+            m.setattr(schema, "DRIVER_ROWS", 0)  # force the distributed loops
             slow = {(r["src"], r["dst"]) for r in transitive_closure(df).collect()}
-        finally:
-            C._DRIVER_CLOSURE_EDGES = old
         assert fast == slow
 
     # output-cap abort hands off to the distributed loop, same answer
     chain = spark.createDataFrame(
         [(f"c{i:02d}", f"c{i+1:02d}") for i in range(20)], "src string, dst string"
     )
-    old_cap = C._DRIVER_CLOSURE_PAIRS
-    C._DRIVER_CLOSURE_PAIRS = 5  # 20-node chain closure is 210 pairs
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(C, "_DRIVER_CLOSURE_PAIRS", 5)  # 20-node chain closure is 210 pairs
         capped = {(r["src"], r["dst"]) for r in transitive_closure(chain).collect()}
-    finally:
-        C._DRIVER_CLOSURE_PAIRS = old_cap
     want = {(f"c{i:02d}", f"c{j:02d}") for i in range(21) for j in range(i + 1, 21)}
     assert capped == want
 
 
-def test_connected_components_driver_regime_matches_distributed(spark):
+def test_transitive_closure_max_iter_is_one_budget(spark, monkeypatch):
+    """max_iter caps the doubling rounds across BOTH distributed loops:
+    two rounds on a 33-node chain cover paths of at most 4 hops, whichever
+    loop runs them (a per-loop budget would let the hand-off reach 16)."""
+    from yamlpyowl_spark import schema
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(32)], "src int, dst int"
+    )
+    monkeypatch.setattr(schema, "DRIVER_ROWS", 0)
+    for broadcast_rows in (schema.BROADCAST_ROWS, 64, 0):
+        # all rounds in the broadcast loop / a hand-off after round 1 /
+        # all rounds semi-naive
+        monkeypatch.setattr(schema, "BROADCAST_ROWS", broadcast_rows)
+        hops = [r["dst"] - r["src"] for r in transitive_closure(chain, max_iter=2).collect()]
+        assert hops and max(hops) <= 4
+
+
+def test_connected_components_driver_regime_matches_distributed(spark, monkeypatch):
     """The measured-tiny driver union-find must return the exact
     (node, min-label component) set of the distributed propagation —
-    chains (pointer jumping), merged stars, and duplicate/self edges."""
+    chains (pointer jumping), merged stars, duplicate/self edges, and a
+    seeded random graph with a 41-node chain."""
     import random
 
+    from yamlpyowl_spark import schema
     from yamlpyowl_spark.operators import cc as CC
 
     random.seed(13)
+    rng = random.Random(7)
+    nodes = [f"n{i:03d}" for i in range(120)]
+    mixed = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(90)]
+    mixed += [(f"c{i:03d}", f"c{i + 1:03d}") for i in range(40)]  # chain
     cases = [
         [(f"n{i:02d}", f"n{i+1:02d}") for i in range(12)],          # chain
         [("h1", "a"), ("h1", "b"), ("h2", "b"), ("h2", "c"),
          ("z", "z"), ("a", "a"), ("h1", "a")],                      # merged stars + self/dup
         [(f"n{random.randrange(50):02d}", f"n{random.randrange(50):02d}") for _ in range(60)],
+        mixed,
     ]
     for edges in cases:
         df = spark.createDataFrame(edges, "src string, dst string")
         fast = {(r["node"], r["component"]) for r in CC.connected_components(df).collect()}
-        old = CC._DRIVER_CC_EDGES
-        CC._DRIVER_CC_EDGES = 0  # force the distributed loop
-        try:
+        with monkeypatch.context() as m:
+            m.setattr(schema, "DRIVER_ROWS", 0)  # force the distributed loop
             slow = {(r["node"], r["component"]) for r in CC.connected_components(df).collect()}
-        finally:
-            CC._DRIVER_CC_EDGES = old
         assert fast == slow
+    # the 41-node chain collapses to one component rooted at its minimum
+    assert dict(slow)["c040"] == "c000"
+
+
+def test_size_dispatch_sets_no_session_conf(spark, monkeypatch):
+    """No operator flips session-global conf mid-query: a concurrent
+    query on the same session must see the settings it started with."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from yamlpyowl_spark import schema
+    from yamlpyowl_spark.operators.linking import canonical_edges, canonical_nodes
+
+    calls = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, key, value):
+        calls.append((key, value))
+        real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+    # closure: broadcast loop; CC (also under canonical_nodes): distributed
+    monkeypatch.setattr(schema, "DRIVER_ROWS", 0)
+    chain = spark.createDataFrame(
+        [(f"c{i:02d}", f"c{i+1:02d}") for i in range(20)], "src string, dst string"
+    )
+    transitive_closure(chain).collect()
+    connected_components(chain).collect()
+    # ex2:A carries two link keys, so the alias groups overlap and CC runs
+    nodes = spark.createDataFrame(
+        [("ex:A", "A", "class"), ("ex2:A", "A", "class"), ("ex2:A", "a", "individual")],
+        "iri string, name string, kind string",
+    )
+    edges = spark.createDataFrame(
+        [("ex2:A", "ex:p", "ex:A")], "src_id string, pred string, dst_id string"
+    )
+    canonical_edges(edges, canonical_nodes(nodes)).collect()
+    assert calls == []
 
 
 def test_corpus_derived_import_map(spark, source, import_map, parsed):

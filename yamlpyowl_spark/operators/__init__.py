@@ -1,18 +1,16 @@
 from .bgp import bgp
-from .cc import connected_components, connected_components_star
+from .cc import connected_components
 from .closure import transitive_closure
 from .dlreason import dl_model_search
-from .linking import alias_edges, canonical_edges, canonical_mapping, canonical_nodes
+from .linking import canonical_edges, canonical_mapping, canonical_nodes
 from .swrl import forward_chain
 
 __all__ = [
     "bgp",
     "connected_components",
-    "connected_components_star",
     "transitive_closure",
     "dl_model_search",
     "forward_chain",
-    "alias_edges",
     "canonical_edges",
     "canonical_mapping",
     "canonical_nodes",

@@ -10,29 +10,15 @@ graphs this pipeline produces are star-shaped (every mention links to
 its group minimum, see :mod:`linking`), so diameter ≤ 2 and this
 converges in 2-3 rounds regardless of data size — the reason we build
 star edges rather than mention-pair cliques (which would be quadratic
-in group size at 10^12-file scale). For general high-diameter graphs
-the alternating small-star/large-star variant (Kiveris et al., "CC in
-MapReduce and Beyond") drops rounds to O(log n); star inputs make the
-simpler propagation strictly better here.
+in group size at 10^12-file scale). Pointer jumping keeps chains at
+O(log d) rounds.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-# label-side broadcast bound (rows of the two-string label tuple):
-# see the dispatch note inside connected_components
-_BROADCAST_LABEL_ROWS = 100_000
-
-# driver-CC regime bound (r7, guide §1.2): a MEASURED-tiny edge set
-# (the alias/near-dup graphs at the verification SFs are a few hundred
-# pairs) pays the iterative label-propagation loop almost entirely in
-# Spark job latency, not compute. Under the bound the components come
-# from ONE bounded probe + a driver union-find shipped back as a local
-# relation — the bounded-collect discipline the closure/rule operators
-# already use. Hard cap: past it, the distributed loop runs unchanged
-# (CC output is ≤ 2 rows per edge, so no separate output cap needed).
-_DRIVER_CC_EDGES = 5_000
+from .. import schema
 
 
 def _py_components(edge_rows):
@@ -61,74 +47,6 @@ def _py_components(edge_rows):
     return sorted((n, find(n)) for n in parent)
 
 
-def _large_star(edges: DataFrame) -> DataFrame:
-    """Kiveris et al. large-star: connect every strictly-larger neighbor
-    of u to the minimum of u's closed neighborhood."""
-    sym = edges.union(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    m = sym.groupBy("a").agg(F.least(F.min("b"), F.first("a")).alias("m"))
-    return (
-        sym.join(m, "a")
-        .filter(F.col("b") > F.col("a"))
-        .select(F.col("b").alias("a"), F.col("m").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-
-
-def _small_star(edges: DataFrame) -> DataFrame:
-    """Kiveris et al. small-star: direct edges large→small, connect all
-    smaller neighbors (and u itself) to the minimum."""
-    d = edges.select(
-        F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b")
-    ).filter(F.col("a") != F.col("b")).distinct()
-    m = d.groupBy("a").agg(F.min("b").alias("m"))
-    joined = d.join(m, "a")
-    out = joined.select(F.col("b").alias("a"), F.col("m").alias("b")).union(
-        joined.select(F.col("a"), F.col("m").alias("b"))
-    )
-    return out.filter(F.col("a") != F.col("b")).distinct()
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 30,
-) -> DataFrame:
-    """Alternating large-star/small-star connected components (Kiveris
-    et al., "Connected Components in MapReduce and Beyond") — O(log n)
-    rounds on any graph, each round two hash aggregations + joins. Use
-    this for general (possibly high-diameter) graphs; the min-label
-    propagation below wins on the star-shaped alias graphs entity
-    linking produces (diameter ≤ 2)."""
-    e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
-    all_nodes = e.select("a").union(e.select(F.col("b").alias("a"))).distinct()
-
-    # exact convergence: equal count AND empty multiset difference vs
-    # the previous edge set (a hash-sum signature could collide and
-    # terminate early on an unconverged graph)
-    n_prev = e.count()
-    for _ in range(max_iter):
-        new_e = _small_star(_large_star(e)).localCheckpoint()
-        n = new_e.count()
-        converged = n == n_prev and new_e.exceptAll(e).isEmpty()
-        e, n_prev = new_e, n
-        if converged:
-            break
-
-    # converged edges point node → component root; roots map to themselves
-    comp = e.select(F.col("a").alias("node"), F.col("b").alias("component"))
-    roots = all_nodes.join(comp, all_nodes.a == comp.node, "left_anti").select(
-        F.col("a").alias("node"), F.col("a").alias("component")
-    )
-    return comp.union(roots)
-
-
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -143,44 +61,29 @@ def connected_components(
         .distinct()
     )
 
-    # driver-CC regime: ONE bounded probe (limit N+1 — never an
-    # unbounded collect) answers both "how big" and "what are the
-    # rows"; a tiny graph resolves in 2 jobs instead of ~4 per
-    # propagation round. Node set parity with the loop below: a node
-    # appears iff it rides at least one non-self edge.
-    probe = e.limit(_DRIVER_CC_EDGES + 1).collect()
-    if len(probe) <= _DRIVER_CC_EDGES:
-        rows = _py_components([(r["a"], r["b"]) for r in probe])
-        # Arrow path (pandas → LocalTableScan): a tuple-list
-        # createDataFrame plans as a pickled Python RDD re-evaluated on
-        # every downstream action (~1.4 s each measured); the Arrow
-        # local relation is JVM-resident
-        import pandas as pd
-
-        return edges.sparkSession.createDataFrame(
-            pd.DataFrame(rows, columns=["node", "component"]),
-            schema="node string, component string",
+    # size dispatch (schema.measured): a measured-tiny graph (the
+    # alias/near-dup graphs at the verification SFs) resolves by one
+    # driver union-find instead of ~4 jobs per propagation round. Node
+    # set parity with the loop below: a node appears iff it rides at
+    # least one non-self edge.
+    e, _, rows = schema.measured(e, schema.DRIVER_ROWS)
+    if rows is not None:
+        return schema.arrow_local_df(
+            edges.sparkSession, _py_components(rows), "node string, component string"
         )
 
-    # symmetric closure once; persisted for reuse across rounds
-    sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).persist()
-
-    labels = (
+    sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+    # the label table's row count (one row per node) is invariant across
+    # rounds: measured once, it picks broadcast or shuffle joins for
+    # every round. The convergence count doubles as the action that
+    # materializes the round's lazy checkpoint.
+    labels, n_labels, _ = schema.measured(
         sym.select(F.col("a").alias("node"))
         .union(sym.select(F.col("b").alias("node")))
         .distinct()
         .withColumn("component", F.col("node"))
-        .localCheckpoint()
     )
-
-    # r7 latency work (guide §3.1, §1.2): one count of the label table
-    # (its row count — one row per node — is invariant across rounds)
-    # drives a measured-size broadcast dispatch for the per-round
-    # joins, and the convergence count doubles as the action that
-    # materializes the round's LAZY checkpoint (eager-checkpoint +
-    # count was two actions per round). Past the bound the shuffle
-    # plans are exactly the previous ones; hints never change labels.
-    small = labels.count() <= _BROADCAST_LABEL_ROWS
+    small = n_labels <= schema.BROADCAST_ROWS
 
     def _b(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if small else df
@@ -227,5 +130,4 @@ def connected_components(
         if changed == 0:
             break
 
-    sym.unpersist()
     return labels

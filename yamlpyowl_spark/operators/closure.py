@@ -9,47 +9,13 @@ all paths. ``localCheckpoint`` per round cuts the growing lineage.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, functions as F
 
+from .. import schema
 
-@contextmanager
-def small_loop_planning(spark, small: bool):
-    """Scoped planning mode for a measured-SMALL iterative loop: with
-    every join side already broadcast-hinted (the caller's size
-    dispatch), AQE's stage-by-stage execution only adds one scheduled
-    job per exchange it materializes — ~5× the action count on a
-    tiny-graph round (measured 28 jobs for a 3-round closure). AQE's
-    value (re-planning big shuffles, skew splitting) needs big
-    shuffles; past the caller's size bound this is a no-op and AQE
-    stays on. The session value is restored on exit."""
-    if not small:
-        yield
-        return
-    old = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old)
-
-
-# closure-side broadcast bound (rows of the two-string pair tuple):
-# see the dispatch note inside transitive_closure
-_BROADCAST_PAIR_ROWS = 100_000
-
-# driver-closure regime bounds (r7, guide §1.2/§3.1): a MEASURED-tiny
-# edge relation (subclass hierarchies, transitive-property graphs — a
-# few hundred distinct pairs at every SF) pays the iterative loop
-# almost entirely in Spark job latency (~2 jobs × ~120 ms per doubling
-# round), not compute. Under these bounds the closure is computed on
-# the driver from ONE bounded collect and shipped back as a local
-# relation — the bounded-collect discipline of the SWRL bad-rule
-# diagnostic (swrl.check_rules). Both bounds are hard caps, not hints:
-# past either, the distributed loops below run unchanged.
-_DRIVER_CLOSURE_EDGES = 5_000      # collect ≤ ~1 MB of string pairs
-_DRIVER_CLOSURE_PAIRS = 500_000    # abort cap on the result size
+# abort cap on the driver-computed closure: past it the distributed
+# loops below run unchanged
+_DRIVER_CLOSURE_PAIRS = 500_000
 
 
 def _py_closure(pairs, cap: int):
@@ -94,63 +60,40 @@ def transitive_closure(
     driver-loop iteration the round count IS the latency, and deep
     chains at corpus scale stay bounded.
 
-    r7 latency work (guide §3.1, §1.2): the per-round convergence count
-    doubles as the action that materializes the round's LAZY checkpoint
-    (one action per round instead of eager-checkpoint + isEmpty), and
-    the counts it returns drive a measured-size broadcast dispatch —
-    while the known closure size stays under ``_BROADCAST_PAIR_ROWS``
-    the round's join sides are broadcast-hinted, collapsing the
-    sort-merge exchanges (and their AQE stage jobs) that dominate a
-    small-graph closure; a closure past the bound keeps the shuffle
-    plans exactly as before. Hints never change the result set."""
-    spark = edges.sparkSession
+    Size dispatch (``schema.measured``): the checkpoint of the distinct
+    edge set counts its own rows. A measured-tiny relation (subclass
+    hierarchies, transitive-property graphs) is closed on the driver by
+    one BFS and shipped back as a local relation — an iterative loop
+    there pays almost only Spark job latency. While the known closure
+    stays under ``schema.BROADCAST_ROWS`` each round is a broadcast
+    squaring; past it, semi-naive rounds keep the shuffle plans. Both
+    loops share one ``max_iter`` round budget, and each round's
+    convergence count also materializes its lazy checkpoint."""
     base = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    closure = base.localCheckpoint()
-
-    # driver-closure regime: ONE bounded probe (limit N+1 — never an
-    # unbounded collect) answers both "how big" and "what are the
-    # rows". If the relation fits, the whole closure is one Python
-    # BFS + one parallelize — 2 jobs total instead of ~2 per doubling
-    # round; identical pair set by construction (1+-hop reachability
-    # over the same distinct string pairs).
-    probe = closure.limit(_DRIVER_CLOSURE_EDGES + 1).collect()
-    if len(probe) <= _DRIVER_CLOSURE_EDGES:
-        pairs = _py_closure([(r["src"], r["dst"]) for r in probe], _DRIVER_CLOSURE_PAIRS)
+    closure, n_closure, rows = schema.measured(base, schema.DRIVER_ROWS)
+    if rows is not None:
+        # identical pair set by construction: 1+-hop reachability over
+        # the same distinct string pairs
+        pairs = _py_closure(rows, _DRIVER_CLOSURE_PAIRS)
         if pairs is not None:
-            # ship back through the Arrow path (pandas → LocalTableScan):
-            # a tuple-list createDataFrame plans as a pickled Python RDD
-            # that re-runs a Python worker pass on EVERY downstream
-            # action (~1.4 s each measured); the Arrow local relation
-            # is JVM-resident and costs ~0.1 s
-            import pandas as pd
+            return schema.arrow_local_df(edges.sparkSession, pairs, closure.schema)
 
-            return spark.createDataFrame(
-                pd.DataFrame(pairs, columns=["src", "dst"]), schema=closure.schema
-            )
-
-    delta = closure
-    n_closure = closure.count()
-    n_delta = n_closure
-
-    for _ in range(max_iter):
-        if (n_closure + n_delta) > _BROADCAST_PAIR_ROWS:
-            break
-        # measured-SMALL regime: naive squaring — closure ∪ closure∘
-        # closure per round still doubles the covered path length
-        # (O(log diameter) rounds), and a round costs exactly ONE
-        # broadcast build + ONE count (which also materializes the lazy
-        # checkpoint). Semi-naive's delta machinery exists to bound the
-        # join work when the relation is big; under the bound the job
-        # count IS the runtime, so the simpler round wins (~7 jobs →
-        # ~2 per round measured). Equal count ⇔ equal set (the union
-        # only grows), so convergence stays exact.
+    delta, n_delta = closure, n_closure
+    rounds = 0
+    while rounds < max_iter and n_closure + n_delta <= schema.BROADCAST_ROWS:
+        rounds += 1
+        # broadcast regime: naive squaring — closure ∪ closure∘closure
+        # per round still doubles the covered path length (O(log
+        # diameter) rounds) for one broadcast build and one count;
+        # semi-naive's delta machinery only pays off when the join work
+        # is big. Equal count ⇔ equal set (the union only grows), so
+        # convergence stays exact.
         c2 = closure.select(F.col("src").alias("csrc"), F.col("dst").alias("cdst"))
         ext = closure.join(
             F.broadcast(c2), F.col("dst") == F.col("csrc")
         ).select("src", F.col("cdst").alias("dst"))
         new_closure = closure.union(ext).distinct().localCheckpoint(eager=False)
-        with small_loop_planning(spark, True):
-            n_new = new_closure.count()
+        n_new = new_closure.count()
         if n_new == n_closure:
             return closure
         # delta for a potential hand-off to the big-regime loop below:
@@ -160,8 +103,8 @@ def transitive_closure(
         closure, n_closure = new_closure, n_new
         delta = closure
 
-    for _ in range(max_iter):
-        # big regime (or small loop exhausted max_iter): semi-naive with
+    for _ in range(max_iter - rounds):
+        # big regime, on the rounds the small loop left: semi-naive with
         # path doubling — every genuinely-new pair decomposes into two
         # halves of which at least one is new (else it existed already),
         # so extend the delta on BOTH sides — delta∘closure alone misses

@@ -17,17 +17,16 @@ Scale design:
   cannot skew a reducer — same trick as map-side combine, made
   explicit;
 * the mapping join back onto nodes uses a plain equi-join on the key —
-  AQE handles residual skew (skewJoin enabled in session config).
+  AQE handles residual skew (skewJoin enabled in session config);
+* under ``schema.BROADCAST_ROWS`` mapping rows the joins onto the
+  mapping are broadcast-hinted instead.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-# mapping-side broadcast bound (rows of the two-string (iri, canonical)
-# tuple ≈ 200 B/row → ~20 MB at the bound, inside the session's 64 MB
-# autoBroadcastJoinThreshold): see the dispatch note in canonical_edges
-_BROADCAST_MAPPING_ROWS = 100_000
+from .. import schema
 
 
 def normalized_label(col):
@@ -72,14 +71,6 @@ def link_key_stats(nodes: DataFrame, salt_buckets: int = 16) -> DataFrame:
     )
 
 
-def alias_edges(nodes: DataFrame, salt_buckets: int = 16) -> DataFrame:
-    """Star-shaped alias graph: mention → group canonical."""
-    mapping = canonical_mapping(nodes, salt_buckets)
-    return mapping.filter(F.col("iri") != F.col("canonical_iri")).select(
-        F.col("iri").alias("src"), F.col("canonical_iri").alias("dst")
-    )
-
-
 def canonical_nodes(nodes: DataFrame, salt_buckets: int = 16) -> DataFrame:
     """nodes + ``canonical_id`` after alias merging (linking + CC).
 
@@ -107,7 +98,7 @@ def canonical_nodes(nodes: DataFrame, salt_buckets: int = 16) -> DataFrame:
         F.countDistinct("iri").alias("ni"),
         F.countDistinct("iri", "canonical_iri").alias("nic"),
     ).head()
-    small = stats["n"] <= _BROADCAST_MAPPING_ROWS
+    small = stats["n"] <= schema.BROADCAST_ROWS
     overlapping = stats["nic"] > stats["ni"]
     if overlapping:
         edges = mapping.filter(F.col("iri") != F.col("canonical_iri")).select(
@@ -132,17 +123,13 @@ def canonical_edges(edges: DataFrame, canonical: DataFrame) -> DataFrame:
     the same logical edge keep distinct per-document predicate IRIs and
     never collapse)."""
     # snapshot once: the mapping feeds THREE joins below and would
-    # otherwise re-run its distinct (a full shuffle) per join (r7)
-    mapping = canonical.select("iri", "canonical_id").distinct().localCheckpoint()
-    # measured-size broadcast dispatch (r7, guide §3.1): ONE count of
-    # the checkpointed mapping decides the join strategy for all three
-    # rewrites. Under the bound each left join compiles to a
-    # BroadcastHashJoin — the edge table is never shuffled (it was
-    # exchanged once PER JOIN KEY before: 3 full shuffles of the edge
-    # set) and the single broadcast is reused three times. Past the
-    # bound the sort-merge plans stand unchanged; a join hint cannot
-    # change the rewritten rows.
-    small = mapping.count() <= _BROADCAST_MAPPING_ROWS
+    # otherwise re-run its distinct (a full shuffle) per join. Its
+    # measured size picks the join strategy for all three rewrites:
+    # under the bound each left join is a BroadcastHashJoin reusing one
+    # broadcast, and the edge table is never shuffled; past it the
+    # sort-merge plans stand.
+    mapping, n, _ = schema.measured(canonical.select("iri", "canonical_id").distinct())
+    small = n <= schema.BROADCAST_ROWS
 
     def _b(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if small else df

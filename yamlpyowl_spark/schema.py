@@ -1,6 +1,6 @@
 """Spark StructTypes for every pipeline table (see FIXTURES.md §2)."""
 
-from pyspark.sql import types as T
+from pyspark.sql import Observation, functions as F, types as T
 
 # the only pipeline input — exact shape from BASELINE.json input_hint
 SOURCE_SCHEMA = T.StructType(
@@ -85,7 +85,7 @@ def arrow_local_df(spark, rows, schema):
     import pandas as pd
 
     if isinstance(schema, str):
-        schema = T._parse_datatype_string(schema)
+        schema = T.StructType.fromDDL(schema)
     if isinstance(schema, T.StructType):
         cols = [f.name for f in schema.fields]
         return spark.createDataFrame(
@@ -93,6 +93,29 @@ def arrow_local_df(spark, rows, schema):
         )
     # plain column-name list: keep the tuple path's type inference
     return spark.createDataFrame(pd.DataFrame(rows, columns=list(schema)))
+
+
+# measured-size regimes shared by every operator that dispatches on a
+# row count (closure, CC, linking): up to DRIVER_ROWS rows (≤ ~1 MB of
+# string pairs) a relation is collected and solved on the driver; up to
+# BROADCAST_ROWS rows (two-string rows ≈ 200 B → ~20 MB, inside the
+# session's 64 MB autoBroadcastJoinThreshold) its joins are broadcast-
+# hinted; past that the shuffle plans stand. Hints never change rows.
+DRIVER_ROWS = 5_000
+BROADCAST_ROWS = 100_000
+
+
+def measured(df, collect_under=0):
+    """``(checkpointed df, row count, rows or None)`` for one size
+    dispatch. ``df`` is checkpointed once; the count is an
+    ``Observation`` riding on that checkpoint's own job, so measuring
+    costs no action beyond the materialization the caller needs anyway.
+    Rows are collected from the checkpoint only when the count is at
+    most ``collect_under``."""
+    obs = Observation()
+    ckpt = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
+    n = obs.get["n"]
+    return ckpt, n, ckpt.collect() if n <= collect_under else None
 
 
 FACT_COLS = [f.name for f in TRIPLE_FIELDS]
